@@ -138,15 +138,20 @@ object Bench {
     }.sortBy { case (_, p, c, _) => -math.max(c / p, p / c) }
   }
 
-  /** One timed run of one query through the noop sink. */
-  private def timeOne(spark: SparkSession, sfDir: String,
-      name: String, fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Double = {
+  /** One timed run of one query through the noop sink: Right(seconds),
+    * or Left(message) when the gate throws — a crashed gate's elapsed
+    * time is not a sample. */
+  private[graft] def timeOne(spark: SparkSession, sfDir: String,
+      name: String, fn: (SparkSession, String) => org.apache.spark.sql.DataFrame)
+    : Either[String, Double] = {
     val t0 = System.nanoTime()
-    try fn(spark, sfDir).write.mode("overwrite").format("noop").save()
-    catch { case e: Throwable =>
+    try {
+      fn(spark, sfDir).write.mode("overwrite").format("noop").save()
+      Right((System.nanoTime() - t0) / 1e9)
+    } catch { case e: Throwable =>
       System.err.println(s"[bench] $name failed: ${e.getMessage}")
+      Left(String.valueOf(e.getMessage))
     }
-    (System.nanoTime() - t0) / 1e9
   }
 
   def main(args: Array[String]): Unit = {
@@ -219,7 +224,7 @@ object Bench {
     // record turned a reproducible 3.6 s query into a recorded 61.8 s
     // median exactly that way. One sentinel per traversal (plus a final
     // one) brackets each round for the contention diagnosis.
-    val samples = Array.fill(ordered.size)(Vector.empty[Double])
+    val samples = Array.fill(ordered.size)(Vector.empty[Either[String, Double]])
     val sentinels = scala.collection.mutable.ArrayBuffer.empty[Double]
     // NOTE on heap sizing (r8 ×10-campaign finding): persisted frames
     // accumulate across the interleaved traversals (shared fact_rounds /
@@ -239,9 +244,16 @@ object Bench {
       }
     }
     sentinels += sentinel()
-    val results = ordered.zipWithIndex.map { case ((name, _), i) =>
-      (name, median(samples(i)), samples(i))
+    // A gate that failed in any traversal is reported by name and kept
+    // out of every median, total and mover below.
+    val failed = ordered.indices.filter(i => samples(i).exists(_.isLeft))
+      .map(ordered(_)._1)
+    val results = ordered.zipWithIndex.collect {
+      case ((name, _), i) if !failed.contains(name) =>
+        val secs = samples(i).collect { case Right(t) => t }
+        (name, median(secs), secs)
     }
+    val failedJson = failed.map("\"" + _ + "\"").mkString("[", ",", "]")
     def fmtMap(entries: Seq[(String, Double)]): String = entries
       .map { case (k, v) => "\"" + k + "\":" + num(v) }
       .mkString("{", ",", "}")
@@ -318,6 +330,7 @@ object Bench {
          |"total_norm_sec":${num(totalNorm)},
          |"movers":$moversJson,
          |"movers_vs_prior":${priorRecord.isDefined},
+         |"failed":$failedJson,
          |"queries":${fmtMap(results.map(r => (r._1, r._2)))},
          |"queries_norm":${fmtMap(results.map(r => (r._1, r._2 / normDiv)))},
          |"runs":${results.map(r => "\"" + r._1 + "\":[" + r._3.map(num).mkString(",") + "]")
@@ -325,11 +338,12 @@ object Bench {
          |"sf":"$sfDir"}""".stripMargin.replace("\n", ""))
     catch { case _: Throwable => () }
     println(
-      s"""{"metric":"total_sec_all_${results.size}_queries_median_of_$repeats","value":${num(total)},"unit":"sec","batch_total":${num(batchTotal)},"streaming_total":${num(streamTotal)},"n_batch":${batchR.size},"n_streaming":${streamR.size},"heap_gb":$heapGb,"queries":${fmtMap(hs)},"sentinel_sec":$sent,"traversal_totals":$travTot,"sentinel_ref_sec":${num(SentinelRefSec)},"sentinel_warm_median":${num(warmMedian)},"sentinel_ratio":${num(sentinelRatio)},"total_norm_sec":${num(totalNorm)},"movers":$moversNames,"sf":"$sfDir"}""")
+      s"""{"metric":"total_sec_all_${results.size}_queries_median_of_$repeats","value":${num(total)},"unit":"sec","batch_total":${num(batchTotal)},"streaming_total":${num(streamTotal)},"n_batch":${batchR.size},"n_streaming":${streamR.size},"heap_gb":$heapGb,"queries":${fmtMap(hs)},"sentinel_sec":$sent,"traversal_totals":$travTot,"sentinel_ref_sec":${num(SentinelRefSec)},"sentinel_warm_median":${num(warmMedian)},"sentinel_ratio":${num(sentinelRatio)},"total_norm_sec":${num(totalNorm)},"movers":$moversNames,"failed":$failedJson,"sf":"$sfDir"}""")
     // Timing phase over: release the session-keyed shared caches — the
     // lifecycle hook stays exercised on every bench run rather than
     // only documented.
     SparkEntry.clearSharedCaches(spark)
     spark.stop()
+    if (failed.nonEmpty) sys.exit(1)
   }
 }

@@ -198,15 +198,16 @@ object MaintenanceQueries {
       (s, d) => {
         val base = scratch("m11")
         val cust = t(s, d, "customer").select(col("c_custkey"), col("c_acctbal"))
-        graft.tables.VersionedTable.commit(cust, base)
-        graft.tables.VersionedTable.commit(
+        val it = graft.tables.IncrementalTable
+        it.commitFull(cust, base)
+        it.commitFull(
           cust.withColumn("c_acctbal", col("c_acctbal") + 100.0), base)
-        val v1 = graft.tables.VersionedTable.read(s, base, Some(1))
+        val v1 = it.read(s, base, Some(1))
           .agg(count(lit(1)).as("n"), dsum(col("c_acctbal")).as("v1_bal"))
-        val v2 = graft.tables.VersionedTable.read(s, base)
+        val v2 = it.read(s, base)
           .agg(dsum(col("c_acctbal")).as("v2_bal"))
-        graft.tables.VersionedTable.rollback(base, 1)
-        val restored = graft.tables.VersionedTable.read(s, base)
+        it.rollback(base, 1)
+        val restored = it.read(s, base)
           .agg(dsum(col("c_acctbal")).as("rollback_bal"))
         v1.crossJoin(v2).crossJoin(restored) // three 1-row frames
       },
@@ -224,12 +225,13 @@ object MaintenanceQueries {
       (s, d) => {
         val base = scratch("m12")
         val cust = t(s, d, "customer").select(col("c_custkey"), col("c_acctbal"))
-        graft.tables.VersionedTable.commit(cust, base)
-        graft.tables.VersionedTable.commit(
+        val it = graft.tables.IncrementalTable
+        it.commitFull(cust, base)
+        it.commitFull(
           cust.withColumn("c_acctbal",
             when(col("c_custkey") % 2 === 0, col("c_acctbal") * 2)
               .otherwise(col("c_acctbal"))), base)
-        graft.tables.VersionedTable.diff(s, base, fromV = 1, toV = 2)
+        it.diff(s, base, fromV = 1, toV = 2)
           .groupBy(col("__change"))
           .agg(count(lit(1)).as("n"), dsum(col("c_acctbal")).as("bal"))
           .orderBy(col("__change"))

@@ -69,9 +69,9 @@ trait CommitStore {
   *  - `putIfMatch` serializes through a JVM-wide monitor: the local
   *    FS has no native CAS, and Spark local mode is single-JVM, so a
   *    process-wide mutex is faithful. (A multi-process local deploy
-  *    would hold [[VersionedTable.withLock]] around commits, which the
-  *    table layer already does; a real object store provides CAS
-  *    natively.)
+  *    would hold the table's `_lock` file around commits, which
+  *    [[IncrementalTable]] already does; a real object store provides
+  *    CAS natively.)
   */
 object LocalCommitStore extends CommitStore {
   private def p(key: String): Path = Paths.get(key)

@@ -27,6 +27,17 @@ private[graft] object FsUtil {
       s.iterator().asScala.toSeq
     }
 
+  /** Newest mtime (epoch ms) of `p` or anything under it. A tree that
+    * changes under the walk (a file vanishes) counts as changed now. */
+  def newestMtime(p: Path): Long =
+    try Using.resource(Files.walk(p)) { s =>
+      import scala.jdk.CollectionConverters._
+      s.iterator().asScala.map(Files.getLastModifiedTime(_).toMillis).max
+    } catch {
+      case _: java.io.IOException | _: java.io.UncheckedIOException =>
+        System.currentTimeMillis()
+    }
+
   /** Recursive delete, deepest-first; no-op when absent. */
   def deleteRec(p: Path): Unit = if (Files.exists(p)) {
     val all = Using.resource(Files.walk(p)) { s =>

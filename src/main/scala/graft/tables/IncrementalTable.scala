@@ -7,14 +7,14 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{col, lit}
 import org.apache.spark.sql.types.{DataType, StructType}
 
-/** Manifest-based incremental table versioning — the Iceberg-shaped
-  * counterpart to [[VersionedTable]]'s full snapshots.
-  *
-  * [[VersionedTable]] rewrites the whole table per commit: right for
-  * dimension/gold tables (the reference rewrites those too,
-  * dimensions.py:366-398), wrong for a 100 TB fact table where one day
-  * of one course changes. Here a commit is METADATA over immutable data
-  * files (etl.py:639-682 gets the same via Iceberg's DELETE+append):
+/** Manifest-based versioned table — the engine's one time-travel /
+  * atomic-commit table, Iceberg-shaped. A commit is METADATA over
+  * immutable data files (etl.py:639-682 gets the same via Iceberg's
+  * DELETE+append): [[commitFull]] replaces the whole live set (right for
+  * dimension/gold tables, which the reference rewrites whole,
+  * dimensions.py:366-398), while [[refreshPartitions]] replaces only the
+  * partitions one run touched — right for a 100 TB fact table where one
+  * day of one course changes.
   *
   * {{{
   *   <path>/data/<hive partition dirs>/<commit>-part-*.parquet  (immutable)
@@ -30,8 +30,8 @@ import org.apache.spark.sql.types.{DataType, StructType}
   *     metadata — every version's files still exist until [[vacuum]];
   *   - [[fileChanges]] derives the (added, removed) file groups of any
   *     version pair by manifest set-difference;
-  *   - [[diff]] is the row-level CDC read, same contract as
-  *     VersionedTable.diff.
+  *   - [[diff]] is the row-level CDC read (inserts and deletes; an
+  *     update is its delete+insert pair).
   *
   * Commit protocol ([[ManifestLog]] over [[CommitStore]] — the
   * object-store-safe design): the heavy data write lands in a
@@ -64,6 +64,16 @@ import org.apache.spark.sql.types.{DataType, StructType}
   * never byte copies, on any HDFS-like filesystem.
   */
 object IncrementalTable {
+
+  /** How long a writer waits for the `_lock` before giving up. */
+  private val LockTimeoutMs = 30000L
+  /** Age past which a `_lock` counts as a crashed writer's and is broken
+    * — the clock-based break every object-store commit protocol
+    * ultimately falls back to. */
+  private val StaleLockMs = 600000L
+  /** [[vacuum]] reclaims a `.staging-*` dir once nothing in it has
+    * changed for this long; a live staging write keeps touching files. */
+  private val StagingGraceMs = 3600000L
 
   private def dataDir(path: String): Path = Paths.get(path, "data")
 
@@ -182,17 +192,89 @@ object IncrementalTable {
     (schema, lines.tail.filter(_.nonEmpty))
   }
 
-  /** Stage `df` as partitioned parquet in a writer-unique dir; returns
-    * (staging dir, staged file paths relative to it). Runs OUTSIDE the
-    * commit lock — this is the heavy part. */
-  private def stage(
-      df: DataFrame, path: String, partitionCols: Seq[String]): (Path, Seq[Path]) = {
+  /** Stage `df` as partitioned parquet in a writer-unique dir, run `body`
+    * on (staging dir, staged file paths relative to it), then delete the
+    * dir — also when the staging write itself throws, so a failed write
+    * leaves no debris. The write runs OUTSIDE the commit lock — this is
+    * the heavy part. */
+  private def staged[T](df: DataFrame, path: String, partitionCols: Seq[String])(
+      body: (Path, Seq[Path]) => T): T = {
     val staging = Paths.get(path, s".staging-${java.util.UUID.randomUUID()}")
-    val w = df.write.mode("overwrite")
-    (if (partitionCols.nonEmpty) w.partitionBy(partitionCols: _*) else w)
-      .parquet(staging.toString)
-    (staging, FsUtil.parquetFiles(staging).map(staging.relativize))
+    try {
+      val w = df.write.mode("overwrite")
+      (if (partitionCols.nonEmpty) w.partitionBy(partitionCols: _*) else w)
+        .parquet(staging.toString)
+      body(staging, FsUtil.parquetFiles(staging).map(staging.relativize))
+    } finally FsUtil.deleteRec(staging)
   }
+
+  /** Serialize local writers on an O_EXCL `_lock` file (atomic create).
+    * A lock older than [[StaleLockMs]] is a crashed writer's and is
+    * broken; waiting longer than [[LockTimeoutMs]] throws. */
+  private def withLock[T](path: String)(body: => T): T = {
+    val lock = Paths.get(path, "_lock")
+    Files.createDirectories(Paths.get(path))
+    // Lock content is "<acquireMillis> <holderToken>": the timestamp
+    // drives staleness, the token proves ownership at release time.
+    val token = java.util.UUID.randomUUID().toString
+    val deadline = System.currentTimeMillis() + LockTimeoutMs
+    var acquired = false
+    while (!acquired) {
+      try {
+        Files.write(lock, s"${System.currentTimeMillis()} $token"
+          .getBytes(StandardCharsets.UTF_8),
+          java.nio.file.StandardOpenOption.CREATE_NEW)
+        acquired = true
+      } catch {
+        case _: java.nio.file.FileAlreadyExistsException =>
+          val age = lockAge(lock)
+          if (age > StaleLockMs) {
+            // Atomic takeover: RENAME the stale lock rather than delete
+            // it — only one waiter wins the move (a delete could race
+            // another waiter's fresh CREATE_NEW and evict a live lock);
+            // losers see NoSuchFile and re-enter the create race.
+            val debris = lock.resolveSibling(
+              s"_lock.broken-${java.util.UUID.randomUUID().toString}")
+            try {
+              Files.move(lock, debris, StandardCopyOption.ATOMIC_MOVE)
+              Files.deleteIfExists(debris); ()
+            } catch { case _: java.nio.file.NoSuchFileException => () }
+          }
+          else if (System.currentTimeMillis() > deadline)
+            throw new IllegalStateException(
+              s"could not acquire $lock within ${LockTimeoutMs}ms")
+          else Thread.sleep(50)
+      }
+    }
+    try body finally releaseLock(lock, token)
+  }
+
+  /** Lock age from its recorded acquire time. When the content doesn't
+    * parse (crash between CREATE_NEW and the content write, corruption),
+    * fall back to the file mtime so an orphaned empty lock still goes
+    * stale instead of wedging every future writer until manual cleanup. */
+  private def lockAge(lock: Path): Long =
+    try {
+      System.currentTimeMillis() - new String(
+        Files.readAllBytes(lock), StandardCharsets.UTF_8)
+        .trim.split("\\s+")(0).toLong
+    } catch {
+      case _: Exception =>
+        try System.currentTimeMillis() - Files.getLastModifiedTime(lock).toMillis
+        catch { case _: Exception => 0L } // vanished mid-check — racing holder
+    }
+
+  /** Release only a lock this holder still owns: a writer paused past
+    * StaleLockMs may have been stale-broken and replaced by another
+    * writer's fresh lock — an unconditional delete here would evict that
+    * live holder and let a third writer into the critical section. The
+    * token check narrows the exposure to the read→delete window (the
+    * stale BREAK itself is an atomic rename, so two breakers can't race). */
+  private def releaseLock(lock: Path, token: String): Unit =
+    try {
+      val content = new String(Files.readAllBytes(lock), StandardCharsets.UTF_8)
+      if (content.contains(token)) { Files.deleteIfExists(lock); () }
+    } catch { case _: Exception => () } // already gone or replaced — not ours to touch
 
   /** Rename staged files into `data/` under a fresh commit prefix;
     * returns their new data-relative paths. Renames, not copies. */
@@ -243,16 +325,14 @@ object IncrementalTable {
     * via time travel until vacuumed). */
   def commitFull(
       df: DataFrame, path: String, partitionCols: Seq[String] = Nil,
-      lockTimeoutMs: Long = 30000, staleLockMs: Long = 600000,
       store: CommitStore = LocalCommitStore): Int = {
     Files.createDirectories(Paths.get(path))
-    val (staging, rels) = stage(df, path, partitionCols)
-    try {
-      VersionedTable.withLock(path, lockTimeoutMs, staleLockMs) {
+    staged(df, path, partitionCols) { (staging, rels) =>
+      withLock(path) {
         commitManifest(path, df.schema, adopt(staging, rels, path), store,
           op = "overwrite")
       }
-    } finally FsUtil.deleteRec(staging)
+    }
   }
 
   /** Incremental partition refresh — the versioned form of
@@ -263,16 +343,14 @@ object IncrementalTable {
     * the replaced files stay on disk for older manifests. */
   def refreshPartitions(
       df: DataFrame, path: String, partitionCols: Seq[String],
-      lockTimeoutMs: Long = 30000, staleLockMs: Long = 600000,
       store: CommitStore = LocalCommitStore): Int = {
     require(partitionCols.nonEmpty, "partition refresh needs partition columns")
     Files.createDirectories(Paths.get(path))
-    val (staging, rels) = stage(df, path, partitionCols)
-    try {
+    staged(df, path, partitionCols) { (staging, rels) =>
       // hive dirs touched by this refresh, e.g. "p=1-URGENT/sub=2"
       val changed = rels.map(r => Option(r.getParent).map(_.toString).getOrElse(""))
         .toSet
-      VersionedTable.withLock(path, lockTimeoutMs, staleLockMs) {
+      withLock(path) {
         val base = currentVersion(path, store)
         val carried = base match {
           case None => Nil
@@ -296,7 +374,7 @@ object IncrementalTable {
           carried ++ adopt(staging, rels, path), store, basedOn = Some(base),
           op = "refresh")
       }
-    } finally FsUtil.deleteRec(staging)
+    }
   }
 
   /** Targeted row deletion (DELETE WHERE — the compliance/right-to-be-
@@ -314,7 +392,6 @@ object IncrementalTable {
   def deleteWhere(
       spark: SparkSession, path: String, partitionCols: Seq[String],
       predicate: org.apache.spark.sql.Column,
-      lockTimeoutMs: Long = 30000, staleLockMs: Long = 600000,
       store: CommitStore = LocalCommitStore): Int = {
     require(partitionCols.nonEmpty, "deleteWhere works on partitioned tables")
     import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils.escapePathName
@@ -344,9 +421,8 @@ object IncrementalTable {
     // row, exactly as in unaffected partitions it never looked at.
     val keepRows = cur.filter(
       inAffected && !org.apache.spark.sql.functions.coalesce(predicate, lit(false)))
-    val (staging, rels) = stage(keepRows, path, partitionCols)
-    try {
-      VersionedTable.withLock(path, lockTimeoutMs, staleLockMs) {
+    staged(keepRows, path, partitionCols) { (staging, rels) =>
+      withLock(path) {
         val vNow = currentVersion(path, store).getOrElse(v0)
         val (schemaNow, filesNow) = manifest(path, vNow, store)
         // OCC guard (same shape as compact's): the rewrite was derived
@@ -367,7 +443,7 @@ object IncrementalTable {
           carried ++ adopt(staging, rels, path), store, basedOn = Some(Some(vNow)),
           op = "delete")
       }
-    } finally FsUtil.deleteRec(staging)
+    }
   }
 
   /** OPTIMIZE as a manifest commit: every partition holding more than
@@ -390,7 +466,6 @@ object IncrementalTable {
   def compact(
       spark: SparkSession, path: String, partitionCols: Seq[String],
       maxFilesPerPartition: Int = 1,
-      lockTimeoutMs: Long = 30000, staleLockMs: Long = 600000,
       store: CommitStore = LocalCommitStore): (Int, Int) = {
     require(partitionCols.nonEmpty, "compaction works on partitioned tables")
     def dirOf(f: String): String = hiveDirOf(f)
@@ -409,9 +484,8 @@ object IncrementalTable {
     // partitions locally, Delta CLONE's exact behavior on rewrite
     val df = readFiles(spark, path, schema0, frag.values.flatten.toSeq)
       .repartition(partitionCols.map(col): _*)
-    val (staging, rels) = stage(df, path, partitionCols)
-    try {
-      VersionedTable.withLock(path, lockTimeoutMs, staleLockMs) {
+    staged(df, path, partitionCols) { (staging, rels) =>
+      withLock(path) {
         val vNow = currentVersion(path, store).getOrElse(v0)
         val (schemaNow, filesNow) = manifest(path, vNow, store)
         val nowByDir = filesNow.groupBy(dirOf)
@@ -427,7 +501,7 @@ object IncrementalTable {
           (filesNow.size, keep.size + adopted.size)
         }
       }
-    } finally FsUtil.deleteRec(staging)
+    }
   }
 
   /** Read a committed snapshot: the current one, or `version` for time
@@ -491,10 +565,9 @@ object IncrementalTable {
     * against, and unlike [[rollback]]'s pin it cannot be silently
     * superseded. Pure metadata: no data moves. Returns the new version. */
   def restore(path: String, version: Int,
-      lockTimeoutMs: Long = 30000, staleLockMs: Long = 600000,
       store: CommitStore = LocalCommitStore): Int = {
     val (schema, files) = manifest(path, version, store)
-    VersionedTable.withLock(path, lockTimeoutMs, staleLockMs) {
+    withLock(path) {
       val base = currentVersion(path, store)
       commitManifest(path, schema, files, store,
         basedOn = Some(base), op = s"restore")
@@ -520,7 +593,6 @@ object IncrementalTable {
     * materialize it. Returns the clone's first committed version. */
   def shallowClone(srcPath: String, dstPath: String,
       version: Option[Int] = None,
-      lockTimeoutMs: Long = 30000, staleLockMs: Long = 600000,
       store: CommitStore = LocalCommitStore): Int = {
     val v = version.orElse(currentVersion(srcPath, store)).getOrElse(
       throw new IllegalArgumentException(s"no committed version at $srcPath"))
@@ -533,7 +605,7 @@ object IncrementalTable {
       else dataDir(srcPath).resolve(f).toAbsolutePath.normalize.toString
     }
     Files.createDirectories(Paths.get(dstPath))
-    VersionedTable.withLock(dstPath, lockTimeoutMs, staleLockMs) {
+    withLock(dstPath) {
       commitManifest(dstPath, schema, entries, store,
         basedOn = Some(currentVersion(dstPath, store)), op = s"clone@v$v")
     }
@@ -548,9 +620,9 @@ object IncrementalTable {
     ((to -- from).toSeq.sorted, (from -- to).toSeq.sorted)
   }
 
-  /** Row-level change feed between two versions (same contract as
-    * VersionedTable.diff): inserts = rows only in `to`, deletes = rows
-    * only in `from`; an update is its delete+insert pair.
+  /** Row-level change feed between two versions: inserts = rows only in
+    * `to`, deletes = rows only in `from`; an update is its delete+insert
+    * pair. Compares whole rows, so callers align schema changes first.
     *
     * Scans ONLY the files the two manifests disagree on: a file carried
     * by reference contributes the identical row multiset to both sides
@@ -586,7 +658,10 @@ object IncrementalTable {
     * files can't be swept: files only enter `data/` under this same
     * lock, and unreferenced files under `data/` belong to dropped
     * versions or to a commit that died mid-adopt (its version was never
-    * logged, so its files are unreachable debris). */
+    * logged, so its files are unreachable debris). A dead writer's
+    * `.staging-*` dir is reclaimed once nothing in it has changed for
+    * [[StagingGraceMs]]: staging writes run outside the lock, so a
+    * younger dir may belong to a live writer. */
   /** `unreferencedGraceMs` protects the LOCKLESS (object-store) path:
     * a writer there adopts data files BEFORE minting its manifest, so
     * a concurrent vacuum would otherwise sweep the in-flight files and
@@ -596,17 +671,20 @@ object IncrementalTable {
     * the grace above the longest possible commit, exactly Delta's
     * retention-vs-in-flight-writer rule. */
   def vacuum(path: String, keep: Int = 2,
-      lockTimeoutMs: Long = 30000, staleLockMs: Long = 600000,
       store: CommitStore = LocalCommitStore,
       unreferencedGraceMs: Long = 0L): Unit = {
-    VersionedTable.withLock(path, lockTimeoutMs, staleLockMs) {
+    withLock(path) {
+      val now = System.currentTimeMillis()
+      FsUtil.listDir(Paths.get(path))
+        .filter(_.getFileName.toString.startsWith(".staging-"))
+        .filter(d => now - FsUtil.newestMtime(d) > StagingGraceMs)
+        .foreach(FsUtil.deleteRec)
       val committed = versions(path, store)
       if (committed.nonEmpty) {
         val keepSet = committed.takeRight(math.max(keep, 1)).toSet ++
           currentVersion(path, store)
         val live = keepSet.toSeq.sorted
           .flatMap(v => manifest(path, v, store)._2).toSet
-        val now = System.currentTimeMillis()
         FsUtil.parquetFiles(dataDir(path)).foreach { f =>
           val quiet =
             try now - Files.getLastModifiedTime(f).toMillis >= unreferencedGraceMs

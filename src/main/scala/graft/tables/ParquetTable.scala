@@ -23,11 +23,25 @@ import org.apache.spark.sql.types.{LongType, StructField, StructType}
   *   - M4 MERGE INTO upsert → full-outer join rewrite (below).
   *   - M5/M6 quarantine + run-summary JSON writes.
   *
-  * On a cluster with Delta/Iceberg these become one-line calls; the
-  * [[TableFormat]] trait pins the surface so such a backend is a drop-in
-  * (see its scaladoc for the per-op mapping).
+  * On a cluster with Delta/Iceberg each op becomes one engine call:
+  *
+  * | op                  | Delta Lake                               | Iceberg                                    |
+  * |---------------------|------------------------------------------|--------------------------------------------|
+  * | createOrReplace     | `CREATE OR REPLACE TABLE ... USING delta`| `CREATE OR REPLACE TABLE ... USING iceberg`|
+  * | refreshPartitions   | `replaceWhere` overwrite                 | `overwritePartitions()`                    |
+  * | alignToSchema       | `mergeSchema=true` write option          | schema evolution on write                  |
+  * | merge               | `DeltaTable.merge(...)`                  | `MERGE INTO` SQL                           |
+  * | compact             | `OPTIMIZE`                               | `rewrite_data_files` procedure             |
+  * | writeQuarantine     | plain JSON write (format-agnostic)       | plain JSON write                           |
+  * | writeRunSummary     | plain JSON write (format-agnostic)       | plain JSON write                           |
+  *
+  * What a table format adds beyond these ops (and plain parquet cannot
+  * give): ACID commits (no swap-rename window), snapshot isolation for
+  * concurrent writers, and time travel. In this engine those come from
+  * [[IncrementalTable]]; the ops here document their non-atomic swap
+  * window ([[swapWrite]]) instead.
   */
-object ParquetTable extends TableFormat {
+object ParquetTable {
 
   /** M2 — create (or fully replace) a partitioned table. */
   def createOrReplace(df: DataFrame, path: String, partitionCols: Seq[String]): Unit = {
@@ -117,11 +131,11 @@ object ParquetTable extends TableFormat {
     * come from one map-side-combined aggregate (cardinality = number of
     * partition values — tiny next to the rewrite itself).
     *
-    * Swap safety: write to a staged sibling, two renames, and the old
-    * copy is deleted ONLY after a validation read of the swapped-in table
-    * succeeds. The window between the two renames is non-atomic (no
-    * table at `path` for its duration — the price of no real table
-    * format); a crash there leaves the data intact in `.__old__`.
+    * Swap safety: the rewrite goes through [[swap]] (staged sibling, two
+    * renames, old copy deleted only after the swapped-in table
+    * validates; a non-atomic window between the renames — the price of
+    * no real table format). A rewrite that lands no parquet file aborts
+    * before anything is renamed.
     *
     * `clusterBy` sorts rows within each output task (after the salt
     * scatter) so every rewritten file carries tight parquet row-group
@@ -172,39 +186,33 @@ object ParquetTable extends TableFormat {
       if (clusterBy.isEmpty) rewritten
       else rewritten.sortWithinPartitions((partitionCols ++ clusterBy).map(col): _*)
     val writer = clustered.write.mode(SaveMode.Overwrite)
-    val staged = Paths.get(path).resolveSibling(
-      Paths.get(path).getFileName.toString + ".__compacting__")
-    deleteRec(staged)
-    (if (partitionCols.nonEmpty) writer.partitionBy(partitionCols: _*) else writer)
-      .parquet(staged.toString)
-    require(FsUtil.parquetFiles(staged).nonEmpty, s"compaction wrote no files to $staged")
-    val old = Paths.get(path).resolveSibling(
-      Paths.get(path).getFileName.toString + ".__old__")
-    deleteRec(old)
-    Files.move(Paths.get(path), old, StandardCopyOption.ATOMIC_MOVE)
-    Files.move(staged, Paths.get(path), StandardCopyOption.ATOMIC_MOVE)
-    // Rollback copy survives until the swapped-in table proves readable.
-    val after = {
-      val files = FsUtil.parquetFiles(Paths.get(path))
-      require(files.nonEmpty, s"post-swap validation failed: no files at $path " +
-        s"(rollback copy preserved at $old)")
-      files.size.toLong
+    swap(path) { staged =>
+      (if (partitionCols.nonEmpty) writer.partitionBy(partitionCols: _*) else writer)
+        .parquet(staged)
+      require(FsUtil.parquetFiles(Paths.get(staged)).nonEmpty,
+        s"compaction wrote no files to $staged")
     }
-    deleteRec(old)
-    (before, after)
+    (before, FsUtil.parquetFiles(Paths.get(path)).size.toLong)
   }
 
-  /** Write `df` to a temp sibling dir, then atomically swap it into place
-    * — the poor man's table-format commit. The window between the two
-    * renames is non-atomic (a crash there leaves no table at `path`, with
-    * the data intact in `.__old__` for manual rollback); the old copy is
-    * deleted only after the swapped-in directory validates non-empty. */
-  def swapWrite(df: DataFrame, path: String): Unit = {
+  /** Write `df` to a temp sibling dir, then swap it into place — the
+    * poor man's table-format commit (see [[swap]]). */
+  def swapWrite(df: DataFrame, path: String): Unit =
+    swap(path)(df.write.mode(SaveMode.Overwrite).parquet(_))
+
+  /** The one swap sequence behind [[swapWrite]] and [[compact]]: `write`
+    * fills a staged sibling dir, which is renamed into place after the
+    * old table is renamed aside. The window between the two renames is
+    * non-atomic (a crash there leaves no table at `path`, with the data
+    * intact in `.__old__` for manual rollback); the old copy is deleted
+    * only after the swapped-in directory validates non-empty. A `write`
+    * that throws leaves the table untouched. */
+  private def swap(path: String)(write: String => Unit): Unit = {
     val p = Paths.get(path)
     val tmp = p.resolveSibling(p.getFileName.toString + ".__staged__")
     val old = p.resolveSibling(p.getFileName.toString + ".__old__")
     deleteRec(tmp); deleteRec(old)
-    df.write.mode(SaveMode.Overwrite).parquet(tmp.toString)
+    write(tmp.toString)
     if (Files.exists(p)) Files.move(p, old, StandardCopyOption.ATOMIC_MOVE)
     Files.move(tmp, p, StandardCopyOption.ATOMIC_MOVE)
     require(Files.exists(p.resolve("_SUCCESS")) || FsUtil.listDir(p).nonEmpty,

@@ -3,7 +3,8 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The bench record's drift machinery: the prior-record reader (our own
-  * bench_full.json format) and the normalized-median movers gate. Pure
+  * bench_full.json format), the normalized-median movers gate, and the
+  * per-gate timing that keeps a crashed gate out of the samples. Pure
   * driver-side logic — no SparkSession needed. */
 class BenchRecordSpec extends AnyFunSuite {
 
@@ -55,5 +56,11 @@ class BenchRecordSpec extends AnyFunSuite {
   test("movers is empty when nothing crosses both gates") {
     assert(Bench.movers(
       Map("a" -> 1.0), 1.0, Map("a" -> 1.2), 1.0).isEmpty)
+  }
+
+  test("a throwing gate yields a failure, not a timed sample") {
+    val r = Bench.timeOne(null, "/nonexistent", "boom",
+      (_, _) => throw new IllegalStateException("gate exploded"))
+    assert(r === Left("gate exploded"))
   }
 }

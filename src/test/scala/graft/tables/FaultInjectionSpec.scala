@@ -7,18 +7,16 @@ import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
 
-/** Crash-path proofs for BOTH table formats: every interleaving a
+/** Crash-path proofs for [[IncrementalTable]]: every interleaving a
   * writer death can produce must leave `read()` on a consistent
   * committed version, never wedge later writers, and leave only
-  * debris that vacuum can reclaim.
-  *
-  * VersionedTable's commit steps are direct filesystem operations, so
-  * crashes are simulated the honest way: construct ON DISK exactly the
-  * state a writer dying between two steps leaves behind, then assert
-  * recovery. IncrementalTable's metadata rides [[CommitStore]], so its
+  * debris that vacuum can reclaim. Metadata rides [[CommitStore]], so
   * crash points are injected live via [[FaultyCommitStore]]
-  * (CommitProtocolSpec covers mint-adjacent crashes; here: vacuum and
-  * compaction interleavings). */
+  * (CommitProtocolSpec covers mint-adjacent crashes; here: vacuum,
+  * compaction, staging and lock interleavings). Filesystem-level
+  * debris (a dead writer's `_lock` or staging dir) is simulated the
+  * honest way: construct ON DISK exactly the state it leaves behind,
+  * then assert recovery. */
 class FaultInjectionSpec extends SparkSpec {
 
   import spark.implicits._
@@ -38,99 +36,80 @@ class FaultInjectionSpec extends SparkSpec {
   private def df(rows: (Long, String, String)*) = rows.toDF("k", "v", "part")
   private def sdf(rows: (Long, String)*) = rows.toDF("k", "v")
 
-  // ---- VersionedTable: crash between snapshot rename and log append ----
+  // ---- IncrementalTable: a failed or abandoned staging write ----------
 
-  test("VT: a version dir the log never names is invisible and cannot wedge the next commit") {
-    val path = freshPath("vt_orphan")
-    val v1 = VersionedTable.commit(sdf((1L, "a")), path)
-    assert(v1 === 1)
+  private def stagingDirs(path: String): Seq[String] =
+    FsUtil.listDir(Paths.get(path)).map(_.getFileName.toString)
+      .filter(_.startsWith(".staging-")).sorted
 
-    // writer died AFTER renaming its snapshot to v00000002 but BEFORE
-    // appending to the log: fabricate exactly that on-disk state
-    val orphan = Paths.get(path, "_versions", "v00000002")
-    sdf((9L, "ORPHAN")).write.parquet(orphan.toString)
-    assert(Files.exists(orphan))
-
-    // reads resolve from the LOG: the orphan is invisible
-    assert(VersionedTable.versions(path) === Seq(1))
-    assert(VersionedTable.read(spark, path)
-      .select("k", "v").as[(Long, String)].collect().toSet === Set((1L, "a")))
-
-    // the next OCC commit reclaims the debris instead of wedging on the
-    // occupied rename target
-    val r = VersionedTable.commitIfCurrent(sdf((2L, "b")), path, Some(1))
-    assert(r === Right(2))
-    assert(VersionedTable.read(spark, path)
-      .select("k", "v").as[(Long, String)].collect().toSet === Set((2L, "b")))
-  }
-
-  // ---- VersionedTable: crash between log append and pointer flip -------
-
-  test("VT: log appended but pointer not flipped — readers stay consistent, next commit heals") {
-    val path = freshPath("vt_ptr")
-    VersionedTable.commit(sdf((1L, "a")), path)
-    VersionedTable.commit(sdf((2L, "b")), path)
-
-    // writer died after appending v3 to the log but before the pointer
-    // flip: v3's snapshot and log entry exist, pointer still says 2
-    sdf((3L, "c")).write.parquet(
-      Paths.get(path, "_versions", "v00000003").toString)
-    val log = Paths.get(path, "_commits")
-    Files.write(log, "1\n2\n3".getBytes(StandardCharsets.UTF_8))
-    assert(VersionedTable.currentVersion(path) === Some(2))
-
-    // reads on the pointer version are consistent; v3 is durable and
-    // time-travelable (log = committed set)
-    assert(VersionedTable.read(spark, path)
-      .select("v").as[String].collect().toSeq === Seq("b"))
-    assert(VersionedTable.versions(path) === Seq(1, 2, 3))
-    assert(VersionedTable.read(spark, path, Some(3))
-      .select("v").as[String].collect().toSeq === Seq("c"))
-
-    // the next commit mints 4 and flips the pointer forward past the
-    // stranded version — nothing is wedged
-    assert(VersionedTable.commit(sdf((4L, "d")), path) === 4)
-    assert(VersionedTable.currentVersion(path) === Some(4))
-  }
-
-  // ---- VersionedTable: crash mid-vacuum --------------------------------
-
-  test("VT: vacuum dying between snapshot deletes and log rewrite converges on re-run") {
-    val path = freshPath("vt_vac")
-    (1 to 4).foreach(i => VersionedTable.commit(sdf((i.toLong, s"v$i")), path))
-
-    // vacuum(keep=2) died after deleting v1's snapshot dir but before
-    // rewriting the log: the log still names 1
-    FsUtil.deleteRec(Paths.get(path, "_versions", "v00000001"))
-    assert(VersionedTable.versions(path) === Seq(1, 2, 3, 4))
-
-    // current reads fine; re-running vacuum converges log and disk
-    assert(VersionedTable.read(spark, path)
-      .select("v").as[String].collect().toSeq === Seq("v4"))
-    VersionedTable.vacuum(path, keep = 2, stagingGraceMs = 0)
-    assert(VersionedTable.versions(path) === Seq(3, 4))
-    assert(VersionedTable.read(spark, path)
-      .select("v").as[String].collect().toSeq === Seq("v4"))
-    // and a fresh commit still works
-    assert(VersionedTable.commit(sdf((5L, "v5")), path) === 5)
-  }
-
-  // ---- VersionedTable: abandoned staging directory ---------------------
-
-  test("VT: a dead writer's staging dir is reclaimed by vacuum after the grace period") {
-    val path = freshPath("vt_stage")
-    VersionedTable.commit(sdf((1L, "a")), path)
-    val staging = Paths.get(path, "_versions", ".staging-deadbeef")
-    sdf((9L, "stage")).write.parquet(staging.toString)
-
-    // young debris survives the grace window (could be an in-flight write)
-    VersionedTable.vacuum(path, keep = 2, stagingGraceMs = 3600000)
-    assert(Files.exists(staging))
-    // quiet past the grace period → reclaimed
-    VersionedTable.vacuum(path, keep = 2, stagingGraceMs = 0)
-    assert(!Files.exists(staging))
-    assert(VersionedTable.read(spark, path)
+  test("IT: a staging write that throws leaves no staging dir behind") {
+    val path = freshPath("it_stage_fail")
+    IncrementalTable.commitFull(df((1L, "a", "p1")), path, Seq("part"))
+    def poisoned = df((2L, "b", "p1"), (3L, "c", "p2")).coalesce(1)
+      .withColumn("v", when(col("k") === 3L, raise_error(lit("boom")))
+        .otherwise(col("v")))
+    intercept[Exception](IncrementalTable.commitFull(poisoned, path, Seq("part")))
+    intercept[Exception](
+      IncrementalTable.refreshPartitions(poisoned, path, Seq("part")))
+    assert(stagingDirs(path).isEmpty)
+    assert(IncrementalTable.versions(path) === Seq(1))
+    assert(IncrementalTable.read(spark, path)
       .select("v").as[String].collect().toSeq === Seq("a"))
+  }
+
+  test("IT: vacuum reclaims a staging dir quiet for an hour, keeps a fresh one") {
+    val path = freshPath("it_stage_age")
+    IncrementalTable.commitFull(sdf((1L, "a")), path)
+    val aged = Paths.get(path, ".staging-deadbeef")
+    val fresh = Paths.get(path, ".staging-inflight")
+    sdf((9L, "dead")).write.parquet(aged.toString)
+    sdf((8L, "live")).write.parquet(fresh.toString)
+    // a dead writer's dir: every file and dir in it last changed 2 h ago
+    val twoHoursAgo = java.nio.file.attribute.FileTime.fromMillis(
+      System.currentTimeMillis() - 2 * 3600 * 1000L)
+    (FsUtil.listDir(aged) :+ aged).foreach(Files.setLastModifiedTime(_, twoHoursAgo))
+
+    IncrementalTable.vacuum(path)
+    assert(stagingDirs(path) === Seq(".staging-inflight"))
+    assert(IncrementalTable.read(spark, path)
+      .select("v").as[String].collect().toSeq === Seq("a"))
+  }
+
+  // ---- IncrementalTable: a dead writer's lock --------------------------
+
+  test("IT: a lock whose recorded acquire time is 0 does not block commits") {
+    val path = freshPath("it_lock_dead")
+    Files.createDirectories(Paths.get(path))
+    val lock = Paths.get(path, "_lock")
+    Files.write(lock, "0 dead-writer".getBytes(StandardCharsets.UTF_8))
+    assert(IncrementalTable.commitFull(sdf((1L, "a")), path) === 1)
+    // the stale lock was broken and ours released: nothing left behind
+    assert(!Files.exists(lock))
+  }
+
+  test("IT: an unparseable lock falls back to its mtime") {
+    val path = freshPath("it_lock_garbled")
+    Files.createDirectories(Paths.get(path))
+    val lock = Paths.get(path, "_lock")
+    val garbled = "not-a-timestamp".getBytes(StandardCharsets.UTF_8)
+
+    // fresh mtime: a live holder — the commit waits until it lets go
+    Files.write(lock, garbled)
+    import scala.concurrent.{Await, Future}
+    import scala.concurrent.ExecutionContext.Implicits.global
+    import scala.concurrent.duration._
+    val waiting = Future(IncrementalTable.commitFull(sdf((1L, "a")), path))
+    Thread.sleep(1000)
+    assert(!waiting.isCompleted)
+    Files.delete(lock)
+    assert(Await.result(waiting, 60.seconds) === 1)
+
+    // mtime older than the stale bound: broken like a dead writer's lock
+    Files.write(lock, garbled)
+    Files.setLastModifiedTime(lock, java.nio.file.attribute.FileTime.fromMillis(
+      System.currentTimeMillis() - 3600 * 1000L))
+    assert(IncrementalTable.commitFull(sdf((2L, "b")), path) === 2)
+    assert(!Files.exists(lock))
   }
 
   // ---- IncrementalTable: crash mid-compaction swap ---------------------

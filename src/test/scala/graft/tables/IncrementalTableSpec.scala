@@ -8,7 +8,7 @@ import graft.SparkSpec
 
 /** Manifest-based incremental commits: a refresh must move only the
   * changed partitions' data while history, time travel, rollback, file
-  * diff and vacuum keep the VersionedTable contract. */
+  * diff and vacuum keep every version readable until it is vacuumed. */
 class IncrementalTableSpec extends SparkSpec {
 
   import spark.implicits._
