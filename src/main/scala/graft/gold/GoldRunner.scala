@@ -14,6 +14,11 @@ import scala.collection.immutable.ListMap
   * re-scanning fix-grain telemetry" rule (pace_summary_by_round.sql:5-7).
   * At 100 TB the persist becomes a written intermediate table; the
   * dependency order is identical.
+  *
+  * Cache contract: `buildAll` persists `silver` and the returned
+  * `fact_rounds` (MEMORY_AND_DISK) and never releases them, because the
+  * returned models are lazy and read both until they are written. The
+  * caller unpersists both once every model it needs is materialised.
   */
 object GoldRunner {
 
@@ -21,13 +26,9 @@ object GoldRunner {
   def buildAll(
       silver: DataFrame,
       topology: DataFrame,
-      exactPercentiles: Boolean = false,
-      persist: Boolean = true): ListMap[String, DataFrame] = {
-    val s = if (persist) silver.persist(StorageLevel.MEMORY_AND_DISK) else silver
-    val factRounds = {
-      val fr = GoldModels.factRounds(s)
-      if (persist) fr.persist(StorageLevel.MEMORY_AND_DISK) else fr
-    }
+      exactPercentiles: Boolean = false): ListMap[String, DataFrame] = {
+    val s = silver.persist(StorageLevel.MEMORY_AND_DISK)
+    val factRounds = GoldModels.factRounds(s).persist(StorageLevel.MEMORY_AND_DISK)
     val holePerf = GoldModels.factRoundHolePerformance(s, topology)
     val byMonth = GoldModels.courseRoundsByMonth(factRounds)
     val byWeekday = GoldModels.courseRoundsByWeekday(factRounds)

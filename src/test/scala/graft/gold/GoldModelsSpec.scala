@@ -32,16 +32,32 @@ class GoldModelsSpec extends SparkSpec {
     json.unionByName(csv).persist()
   }
 
-  private lazy val models = GoldRunner.buildAll(silver, topology, persist = false)
+  private lazy val models = GoldRunner.buildAll(silver, topology)
+
+  // buildAll leaves silver and fact_rounds cached for its caller; release
+  // them so the shared session does not carry them into later suites.
+  override def afterAll(): Unit = {
+    try {
+      models("fact_rounds").unpersist()
+      silver.unpersist()
+    } finally super.afterAll()
+  }
 
   test("all 20 models build and are non-degenerate") {
-    assert(models.size === 20)
-    models.foreach { case (name, df) =>
-      val n = df.count()
-      // device_health_errors can legitimately be empty (no battery < 20 in
-      // fixtures); everything else must produce rows.
-      if (name != "device_health_errors")
-        assert(n > 0, s"$name produced no rows")
+    // Both percentile modes: the benchmark builds the approximate sketches,
+    // the gm_global_* gates the exact ones. collect, not count: count()
+    // prunes every unread aggregate, the percentiles included.
+    for ((exact, built) <- Seq(
+        false -> models,
+        true -> GoldRunner.buildAll(silver, topology, exactPercentiles = true))) {
+      assert(built.size === 20)
+      built.foreach { case (name, df) =>
+        val n = df.collect().length
+        // device_health_errors can legitimately be empty (no battery < 20 in
+        // fixtures); everything else must produce rows.
+        if (name != "device_health_errors")
+          assert(n > 0, s"$name produced no rows (exactPercentiles = $exact)")
+      }
     }
   }
 
