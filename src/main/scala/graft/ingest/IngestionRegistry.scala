@@ -1,8 +1,9 @@
 package graft.ingest
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 
 /** M8 — ingestion registry: the reference logs every ingest attempt
   * (started / success / failed / skipped) to Postgres and uses it for
@@ -18,11 +19,15 @@ object IngestionRegistry {
       spark: SparkSession, path: String,
       courseId: String, ingestDate: String,
       status: String, rows: Long, message: String, seq: Long): Unit = {
-    import spark.implicits._
-    Seq((courseId, ingestDate, status, rows, message, seq))
-      .toDF("course_id", "ingest_date", "status", "rows", "message", "seq")
+    spark.createDataFrame(
+        java.util.List.of(Row(courseId, ingestDate, status, rows, message, seq)), LogSchema)
       .write.mode(SaveMode.Append).parquet(path)
   }
+
+  private val LogSchema = StructType(Seq(
+    StructField("course_id", StringType), StructField("ingest_date", StringType),
+    StructField("status", StringType), StructField("rows", LongType, nullable = false),
+    StructField("message", StringType), StructField("seq", LongType, nullable = false)))
 
   /** Latest attempt per (course, date) — the W1 dedup pattern applied to
     * operational state. */

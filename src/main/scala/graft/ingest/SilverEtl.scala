@@ -1,10 +1,11 @@
 package graft.ingest
 
-import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.{Column, DataFrame, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import scala.collection.immutable.ListMap
 import scala.util.matching.Regex
 
 /** The Silver ETL: raw round exports (nested JSON or flattened CSV) → one
@@ -22,7 +23,10 @@ import scala.util.matching.Regex
   *   - Every stage is a pure function; the driver never collects fix-grain
   *     data.
   *   - The quarantine split computes the invalid-coordinate predicate once
-  *     and reuses the flagged frame for both outputs (etl.py:590-608).
+  *     and reuses the flagged frame for both outputs (etl.py:590-608);
+  *     `SilverJob` materialises that frame once per drop.
+  *   - Format detection and each CSV group's header schema are resolved on
+  *     the driver, so planning a drop starts no probe job.
   */
 object SilverEtl {
 
@@ -40,36 +44,69 @@ object SilverEtl {
 
   // ---------------------------------------------------------------- scans
 
-  /** S1 — detect CSV vs JSON under a directory (etl.py:40-61). Uses the
-    * binaryFile reader so it works against any Hadoop-compatible FS. */
-  def detectFileFormat(spark: SparkSession, dir: String): String = {
-    def existsAny(glob: String): Boolean =
-      try spark.read.format("binaryFile").load(glob).limit(1).count() > 0
-      catch { case _: Exception => false }
-    if (dir.endsWith(".json") || existsAny(s"$dir/*.json")) "json"
-    else if (dir.endsWith(".csv") || existsAny(s"$dir/*.csv")) "csv"
-    else "csv" // default; the read will fail naturally (etl.py:60-61)
+  /** The files the landing readers scan: the paths matching `glob` that
+    * Spark's own file listing would keep (hidden `_`/`.` names skipped),
+    * in path order. Driver-side Hadoop `FileSystem` listing, so it runs no
+    * Spark job on any Hadoop-compatible FS. */
+  private def listLanding(spark: SparkSession, glob: String): Seq[String] = {
+    val pattern = new Path(glob)
+    val fs = pattern.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    Option(fs.globStatus(pattern)).toSeq.flatten
+      .filter { st =>
+        val name = st.getPath.getName
+        st.isFile && !name.startsWith("_") && !name.startsWith(".")
+      }
+      .map(_.getPath.toString).sorted
   }
+
+  private def csvFiles(spark: SparkSession, dir: String): Seq[String] =
+    listLanding(spark, if (dir.endsWith(".csv")) dir else s"$dir/*.csv")
+
+  /** S1 with its evidence: the detected format and the paths to read for
+    * it. A path ending in `.json`/`.csv` is read as given. */
+  private def detectLanding(spark: SparkSession, dir: String): (String, Seq[String]) =
+    if (dir.endsWith(".json")) ("json", Seq(dir))
+    else {
+      val json = listLanding(spark, s"$dir/*.json")
+      // CSV is also the default: with no CSV file the read fails (etl.py:60-61).
+      if (json.nonEmpty) ("json", json) else ("csv", csvFiles(spark, dir))
+    }
+
+  /** S1 — detect CSV vs JSON under a directory (etl.py:40-61). Globs
+    * through the Hadoop `FileSystem`, so it works against any
+    * Hadoop-compatible FS and starts no Spark job. */
+  def detectFileFormat(spark: SparkSession, dir: String): String =
+    detectLanding(spark, dir)._1
 
   /** S2 — multiline JSON scan for MongoDB-style array exports
     * (etl.py:137-146). */
-  def readJson(spark: SparkSession, path: String): DataFrame =
-    spark.read.option("multiLine", true).json(path)
+  def readJson(spark: SparkSession, path: String): DataFrame = readJsonFiles(spark, Seq(path))
+
+  private def readJsonFiles(spark: SparkSession, paths: Seq[String]): DataFrame =
+    spark.read.option("multiLine", true).json(paths: _*)
 
   /** S3 — heterogeneous CSV scan: files may carry different `locations[N]`
     * column sets and orders, so positional glob reads silently misalign
     * (the reference's own warning, etl.py:156-161). We sniff each header,
     * group files with identical headers, read each group in one scan, and
     * union the groups BY NAME with missing columns as NULL. */
-  def readCsvUnion(spark: SparkSession, dir: String): DataFrame = {
-    val fs = FileSystem.get(
-      new java.net.URI(dir), spark.sparkContext.hadoopConfiguration)
-    val files = fs.globStatus(new Path(if (dir.endsWith(".csv")) dir else s"$dir/*.csv"))
-      .map(_.getPath).sortBy(_.toString)
-    require(files.nonEmpty, s"No CSV files found at: $dir")
+  def readCsvUnion(spark: SparkSession, dir: String): DataFrame =
+    readCsvFiles(spark, dir, csvFiles(spark, dir))
 
-    def headerOf(p: Path): String = {
-      val in = fs.open(p)
+  private def csvReader(spark: SparkSession) =
+    spark.read.option("header", true).option("escape", "\"").option("multiLine", false)
+
+  /** Each group's all-string schema comes from Spark's own CSV header
+    * handling run over the one header line as a local Dataset: the same
+    * `_cN` names for empty headers and the same duplicate-name suffixes as
+    * a `header=true` scan, without the scan's schema-inference job. */
+  private def readCsvFiles(spark: SparkSession, dir: String, files: Seq[String]): DataFrame = {
+    require(files.nonEmpty, s"No CSV files found at: $dir")
+    val conf = spark.sparkContext.hadoopConfiguration
+
+    def headerOf(file: String): String = {
+      val p = new Path(file)
+      val in = p.getFileSystem(conf).open(p)
       try {
         val reader = new java.io.BufferedReader(new java.io.InputStreamReader(in, "UTF-8"))
         Option(reader.readLine()).getOrElse("")
@@ -77,12 +114,10 @@ object SilverEtl {
     }
 
     val groups = files.groupBy(headerOf).toSeq.sortBy(_._1)
-    val dfs = groups.map { case (_, paths) =>
-      spark.read
-        .option("header", true)
-        .option("escape", "\"")
-        .option("multiLine", false)
-        .csv(paths.map(_.toString).toIndexedSeq: _*)
+    val dfs = groups.map { case (header, paths) =>
+      val schema = csvReader(spark)
+        .csv(spark.createDataset(Seq(header))(Encoders.STRING)).schema
+      csvReader(spark).schema(schema).csv(paths: _*)
     }
     dfs.reduce(_.unionByName(_, allowMissingColumns = true))
   }
@@ -148,30 +183,31 @@ object SilverEtl {
       }
       else lit(null).cast(StringType)
 
-    df.withColumn("round_id", roundId)
-      .withColumn("course_id", lit(cfg.courseId))
-      .withColumn("ingest_date", lit(cfg.ingestDate))
-      .withColumn("round_start_time", timestampCol(df, "startTime"))
-      .withColumn("round_end_time", timestampCol(df, "endTime"))
-      .withColumn("start_hole", safeCol(df, "startHole").cast(IntegerType))
-      .withColumn("start_section", safeCol(df, "startSection").cast(IntegerType))
-      .withColumn("end_section", safeCol(df, "endSection").cast(IntegerType))
-      .withColumn("is_nine_hole", safeCol(df, "isNineHole").cast(BooleanType))
-      .withColumn("current_nine", safeCol(df, "currentNine").cast(IntegerType))
-      .withColumn("goal_time", safeCol(df, "goalTime").cast(IntegerType))
-      .withColumn("is_complete", safeCol(df, "complete").cast(BooleanType))
-      .withColumn("device", safeCol(df, "device").cast(StringType))
-      .withColumn("first_fix", safeCol(df, "firstFix").cast(StringType))
-      .withColumn("last_fix", safeCol(df, "lastFix").cast(StringType))
-      .withColumn("goal_name", safeCol(df, "goalName").cast(StringType))
-      .withColumn("goal_time_fraction", safeCol(df, "goalTimeFraction").cast(DoubleType))
-      .withColumn("is_incomplete", safeCol(df, "isIncomplete").cast(BooleanType))
-      .withColumn("is_secondary", safeCol(df, "isSecondary").cast(BooleanType))
-      .withColumn("is_auto_assigned", safeCol(df, "isAutoAssigned").cast(BooleanType))
-      .withColumn("last_section_start", safeCol(df, "lastSectionStart").cast(DoubleType))
-      .withColumn("current_section", safeCol(df, "currentSection").cast(IntegerType))
-      .withColumn("current_hole", safeCol(df, "currentHole").cast(IntegerType))
-      .withColumn("current_hole_section", safeCol(df, "currentHoleSection").cast(IntegerType))
+    df.withColumns(ListMap(
+      "round_id" -> roundId,
+      "course_id" -> lit(cfg.courseId),
+      "ingest_date" -> lit(cfg.ingestDate),
+      "round_start_time" -> timestampCol(df, "startTime"),
+      "round_end_time" -> timestampCol(df, "endTime"),
+      "start_hole" -> safeCol(df, "startHole").cast(IntegerType),
+      "start_section" -> safeCol(df, "startSection").cast(IntegerType),
+      "end_section" -> safeCol(df, "endSection").cast(IntegerType),
+      "is_nine_hole" -> safeCol(df, "isNineHole").cast(BooleanType),
+      "current_nine" -> safeCol(df, "currentNine").cast(IntegerType),
+      "goal_time" -> safeCol(df, "goalTime").cast(IntegerType),
+      "is_complete" -> safeCol(df, "complete").cast(BooleanType),
+      "device" -> safeCol(df, "device").cast(StringType),
+      "first_fix" -> safeCol(df, "firstFix").cast(StringType),
+      "last_fix" -> safeCol(df, "lastFix").cast(StringType),
+      "goal_name" -> safeCol(df, "goalName").cast(StringType),
+      "goal_time_fraction" -> safeCol(df, "goalTimeFraction").cast(DoubleType),
+      "is_incomplete" -> safeCol(df, "isIncomplete").cast(BooleanType),
+      "is_secondary" -> safeCol(df, "isSecondary").cast(BooleanType),
+      "is_auto_assigned" -> safeCol(df, "isAutoAssigned").cast(BooleanType),
+      "last_section_start" -> safeCol(df, "lastSectionStart").cast(DoubleType),
+      "current_section" -> safeCol(df, "currentSection").cast(IntegerType),
+      "current_hole" -> safeCol(df, "currentHole").cast(IntegerType),
+      "current_hole_section" -> safeCol(df, "currentHoleSection").cast(IntegerType)))
   }
 
   // ------------------------------------------------------- explode (P4 / P5)
@@ -275,20 +311,19 @@ object SilverEtl {
         col("location.is_problem"),
         col("location.pace_gap"), col("location.positional_gap"), col("location.pace"),
         col("location.battery_percentage"))
-      .withColumn("event_date", to_date(col("fix_timestamp")))
-      // P8 — round duration minutes, null-guarded, 2 dp (etl.py:451-464)
-      .withColumn(
-        "round_duration_minutes",
-        when(
+      .withColumns(ListMap(
+        "event_date" -> to_date(col("fix_timestamp")),
+        // P8 — round duration minutes, null-guarded, 2 dp (etl.py:451-464)
+        "round_duration_minutes" -> when(
           col("round_start_time").isNotNull && col("round_end_time").isNotNull,
           round(
             (unix_timestamp(col("round_end_time")) -
-              unix_timestamp(col("round_start_time"))) / 60.0, 2)))
-      // P9 — date parts; Spark dayofweek is 1=Sun..7=Sat (etl.py:467-474)
-      .withColumn("event_year", year(col("fix_timestamp")))
-      .withColumn("event_month", month(col("fix_timestamp")))
-      .withColumn("event_day", dayofmonth(col("fix_timestamp")))
-      .withColumn("event_weekday", dayofweek(col("fix_timestamp")))
+              unix_timestamp(col("round_start_time"))) / 60.0, 2)),
+        // P9 — date parts; Spark dayofweek is 1=Sun..7=Sat (etl.py:467-474)
+        "event_year" -> year(col("fix_timestamp")),
+        "event_month" -> month(col("fix_timestamp")),
+        "event_day" -> dayofmonth(col("fix_timestamp")),
+        "event_weekday" -> dayofweek(col("fix_timestamp"))))
   }
 
   /** P10 fallback ladder pieces (etl.py:491-503; thresholds from
@@ -336,14 +371,13 @@ object SilverEtl {
 
   /** P11 — WKT point string + timestamp-missing flag (etl.py:554-569). */
   def withGeometry(df: DataFrame): DataFrame =
-    df.withColumn(
-        "geometry_wkt",
-        when(
-          col("longitude").isNotNull && col("latitude").isNotNull,
-          concat(
-            lit("POINT("), col("longitude").cast(StringType),
-            lit(" "), col("latitude").cast(StringType), lit(")"))))
-      .withColumn("is_timestamp_missing", col("fix_timestamp").isNull)
+    df.withColumns(ListMap(
+      "geometry_wkt" -> when(
+        col("longitude").isNotNull && col("latitude").isNotNull,
+        concat(
+          lit("POINT("), col("longitude").cast(StringType),
+          lit(" "), col("latitude").cast(StringType), lit(")"))),
+      "is_timestamp_missing" -> col("fix_timestamp").isNull))
 
   // ----------------------------------------------------------- dedup (W1)
 
@@ -366,19 +400,21 @@ object SilverEtl {
 
   // ------------------------------------------------- quarantine split (P12)
 
-  /** P12 — invalid-coordinate predicate + split. One flagged frame feeds
-    * both outputs; callers persist it if they consume both at scale
-    * (etl.py:590-608). */
-  def splitByCoordBounds(df: DataFrame, b: CoordBounds): (DataFrame, DataFrame) = {
-    val invalidCoord =
+  /** P12 — the invalid-coordinate flag (etl.py:590-608): true where a
+    * present longitude or latitude lies outside the bounds. */
+  def flagInvalidCoords(df: DataFrame, b: CoordBounds): DataFrame =
+    df.withColumn("is_invalid_coord",
       (col("longitude").isNotNull &&
         (col("longitude") < b.lonMin || col("longitude") > b.lonMax)) ||
         (col("latitude").isNotNull &&
-          (col("latitude") < b.latMin || col("latitude") > b.latMax))
-    val flagged = df.withColumn("is_invalid_coord", invalidCoord)
+          (col("latitude") < b.latMin || col("latitude") > b.latMax)))
+
+  /** P12 — split a [[flagInvalidCoords]] frame into (valid, invalid),
+    * dropping the flag. Both halves share the flagged lineage; a caller
+    * that consumes both persists the flagged frame first. */
+  def splitFlagged(flagged: DataFrame): (DataFrame, DataFrame) =
     (flagged.filter(!col("is_invalid_coord")).drop("is_invalid_coord"),
       flagged.filter(col("is_invalid_coord")).drop("is_invalid_coord"))
-  }
 
   /** P14 — empty-string → NULL normalization for seed text columns
     * (dimensions.py:346-353). */
@@ -389,12 +425,12 @@ object SilverEtl {
   // ------------------------------------------------------------- pipeline
 
   /** The full Silver transformation from a raw landing DataFrame (either
-    * shape) to (valid, quarantined) telemetry. Mirrors etl.py:main's
-    * dataflow: round fields → explode → derive → nine_number → geometry →
-    * dedup → coordinate split. */
-  def transform(
-      landing: DataFrame,
-      cfg: SilverConfig): (DataFrame, DataFrame) = {
+    * shape) up to the quarantine split: one telemetry row per deduped fix,
+    * carrying its `is_invalid_coord` flag. Mirrors etl.py:main's dataflow:
+    * round fields → explode → derive → nine_number → geometry → dedup →
+    * coordinate flag. [[transform]] splits this frame; [[SilverJob]]
+    * persists it once and feeds both sinks from the cache. */
+  def flagged(landing: DataFrame, cfg: SilverConfig): DataFrame = {
     val withRounds = withRoundFields(landing, cfg)
     val exploded =
       if (landing.columns.contains("locations"))
@@ -406,19 +442,27 @@ object SilverEtl {
         explodeCsvLocations(withRounds, idxs)
       }
     val derived = withGeometry(withNineNumber(deriveTelemetry(exploded), cfg.topology))
-    splitByCoordBounds(dedupFixes(derived), cfg.bounds)
+    flagInvalidCoords(dedupFixes(derived), cfg.bounds)
   }
+
+  /** The Silver transformation as (valid, quarantined) telemetry: the
+    * [[flagged]] frame, split. */
+  def transform(
+      landing: DataFrame,
+      cfg: SilverConfig): (DataFrame, DataFrame) =
+    splitFlagged(flagged(landing, cfg))
+
+  /** S1 → S2/S3: the raw landing frame of a directory, read from exactly
+    * the files format detection listed. */
+  def read(spark: SparkSession, landingDir: String): DataFrame =
+    detectLanding(spark, landingDir) match {
+      case ("json", paths) => readJsonFiles(spark, paths)
+      case (_, paths)      => readCsvFiles(spark, landingDir, paths)
+    }
 
   /** End-to-end read + transform from a landing directory (S1 → S2/S3 →
     * transform). */
   def run(spark: SparkSession, landingDir: String, cfg: SilverConfig)
-      : (DataFrame, DataFrame) = {
-    val landing = detectFileFormat(spark, landingDir) match {
-      case "json" =>
-        readJson(spark,
-          if (landingDir.endsWith(".json")) landingDir else s"$landingDir/*.json")
-      case _ => readCsvUnion(spark, landingDir)
-    }
-    transform(landing, cfg)
-  }
+      : (DataFrame, DataFrame) =
+    transform(read(spark, landingDir), cfg)
 }

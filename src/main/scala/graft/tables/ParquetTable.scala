@@ -2,9 +2,9 @@ package graft.tables
 
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 
-import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{LongType, StructField, StructType}
+import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 
 /** Maintenance operators M1–M7 (SURVEY §2.10) on plain-parquet tables.
   *
@@ -16,7 +16,8 @@ import org.apache.spark.sql.types.{LongType, StructField, StructType}
   *     (`partitionOverwriteMode=dynamic`) — Spark only rewrites the
   *     partitions present in the incoming frame, the exact semantics of
   *     the reference's DELETE WHERE course/date + append (etl.py:639-677),
-  *     without a table format.
+  *     without a table format. Each refresh writes one file per partition
+  *     value (a `rebalance` by the partition columns).
   *   - M2 first-run CTAS with partitioning → partitioned parquet write.
   *   - M3 schema evolution → align-by-name projection (add missing as
   *     NULL, drop unknown extras) mirroring etl.py:654-673.
@@ -51,10 +52,23 @@ object ParquetTable {
 
   /** M1 — idempotent partition refresh: only the partitions present in
     * `df` are replaced; everything else is untouched. Re-running the same
-    * ingest is a no-op in row counts (the reference's DELETE+append goal). */
+    * ingest is a no-op in row counts (the reference's DELETE+append goal).
+    *
+    * Rows are rebalanced by the partition columns before the write, so a
+    * refresh lands one file per partition value (AQE coalesces the small
+    * shuffle partitions and splits only a partition larger than its
+    * advisory size), not one file per upstream task per partition. Spark
+    * drops a rebalance when AQE is off, as it is inside a streaming
+    * micro-batch; there the rows are hash-repartitioned by the same
+    * columns instead, which keeps one file per value but splits no skew. */
   def refreshPartitions(df: DataFrame, path: String, partitionCols: Seq[String]): Unit = {
     require(partitionCols.nonEmpty, "partition refresh needs partition columns")
-    df.write
+    val cols = partitionCols.map(col)
+    val clustered =
+      if (df.sparkSession.conf.get("spark.sql.adaptive.enabled").toBoolean)
+        df.hint("rebalance", cols: _*)
+      else df.repartition(cols: _*)
+    clustered.write
       .mode(SaveMode.Overwrite)
       .option("partitionOverwriteMode", "dynamic")
       .partitionBy(partitionCols: _*)
@@ -169,7 +183,7 @@ object ParquetTable {
         val perPartRows = countRows.map { r =>
           val n = math.max(1L,
             math.ceil(r.getLong(partitionCols.size) * bytesPerRow / targetBytes).toLong)
-          org.apache.spark.sql.Row.fromSeq(
+          Row.fromSeq(
             partitionCols.indices.map(r.get) :+ n)
         }
         val perPart = spark.createDataFrame(
@@ -229,15 +243,13 @@ object ParquetTable {
     path
   }
 
-  /** M6 — single-file JSON run summary (etl.py:687-703): one record,
-    * coalesce(1), observability path. */
+  /** M6 — single-file JSON run summary (etl.py:687-703): one record of
+    * string fields in key order, coalesce(1), observability path. The
+    * frame is built from a declared schema, so no inference job runs. */
   def writeRunSummary(spark: SparkSession, path: String, summary: Map[String, String]): Unit = {
-    import spark.implicits._
-    def esc(s: String) = s.replace("\\", "\\\\").replace("\"", "\\\"")
-    val json = summary.toSeq.sortBy(_._1)
-      .map { case (k, v) => s""""${esc(k)}": "${esc(v)}"""" }
-      .mkString("{", ", ", "}")
-    spark.read.json(Seq(json).toDS)
+    val fields = summary.toSeq.sortBy(_._1)
+    val schema = StructType(fields.map { case (k, _) => StructField(k, StringType) })
+    spark.createDataFrame(java.util.List.of(Row.fromSeq(fields.map(_._2))), schema)
       .coalesce(1).write.mode(SaveMode.Overwrite).json(path)
   }
 

@@ -38,6 +38,36 @@ class MaintenanceSpec extends SparkSpec {
     assert(spark.read.parquet(path).count() === 2)
   }
 
+  // AQE on (batch jobs) and off (Spark turns it off in streaming
+  // micro-batches, where a rebalance hint is dropped).
+  Seq(true, false).foreach { aqe =>
+    test(s"M1: a partition refresh writes one file per partition value, idempotently (AQE $aqe)") {
+      val session = spark.newSession()
+      session.conf.set("spark.sql.adaptive.enabled", aqe.toString)
+      import session.implicits._
+      val path = s"${tmp()}/t"
+      val batch = (1 to 60).map(i => (s"c${i % 2}", f"2024-01-0${i % 3 + 1}", i))
+        .toDF("course_id", "event_date", "v")
+        .repartition(8) // every task holds rows of every partition value
+      def filesPerPartition(): Map[String, Int] =
+        FsUtil.parquetFiles(java.nio.file.Paths.get(path))
+          .groupBy(f => java.nio.file.Paths.get(path).relativize(f.getParent).toString)
+          .map { case (dir, files) => dir -> files.size }
+      def rows() = session.read.parquet(path).select("course_id", "v")
+        .collect().map(r => (r.getString(0), r.getInt(1))).sorted.toSeq
+
+      ParquetTable.refreshPartitions(batch, path, Seq("course_id", "event_date"))
+      val first = filesPerPartition()
+      assert(first.size === 6 && first.values.forall(_ == 1), first)
+      val firstRows = rows()
+      assert(firstRows.size === 60)
+
+      ParquetTable.refreshPartitions(batch, path, Seq("course_id", "event_date"))
+      assert(filesPerPartition() === first)
+      assert(rows() === firstRows)
+    }
+  }
+
   test("compaction collapses per-batch fragment files, preserves data exactly") {
     import spark.implicits._
     val path = s"${tmp()}/t"
