@@ -59,48 +59,38 @@ object SilverEtl {
       .map(_.getPath.toString).sorted
   }
 
-  private def csvFiles(spark: SparkSession, dir: String): Seq[String] =
-    listLanding(spark, if (dir.endsWith(".csv")) dir else s"$dir/*.csv")
-
-  /** S1 with its evidence: the detected format and the paths to read for
-    * it. A path ending in `.json`/`.csv` is read as given. */
-  private def detectLanding(spark: SparkSession, dir: String): (String, Seq[String]) =
-    if (dir.endsWith(".json")) ("json", Seq(dir))
-    else {
-      val json = listLanding(spark, s"$dir/*.json")
-      // CSV is also the default: with no CSV file the read fails (etl.py:60-61).
-      if (json.nonEmpty) ("json", json) else ("csv", csvFiles(spark, dir))
-    }
+  /** The JSON files of a landing directory; a path ending in `.json` is
+    * read as given. */
+  private def jsonFiles(spark: SparkSession, dir: String): Seq[String] =
+    if (dir.endsWith(".json")) Seq(dir) else listLanding(spark, s"$dir/*.json")
 
   /** S1 — detect CSV vs JSON under a directory (etl.py:40-61). Globs
     * through the Hadoop `FileSystem`, so it works against any
-    * Hadoop-compatible FS and starts no Spark job. */
+    * Hadoop-compatible FS and starts no Spark job. CSV is also the
+    * default: with no CSV file the read fails (etl.py:60-61). */
   def detectFileFormat(spark: SparkSession, dir: String): String =
-    detectLanding(spark, dir)._1
+    if (jsonFiles(spark, dir).nonEmpty) "json" else "csv"
 
   /** S2 — multiline JSON scan for MongoDB-style array exports
     * (etl.py:137-146). */
-  def readJson(spark: SparkSession, path: String): DataFrame = readJsonFiles(spark, Seq(path))
-
-  private def readJsonFiles(spark: SparkSession, paths: Seq[String]): DataFrame =
+  def readJson(spark: SparkSession, paths: String*): DataFrame =
     spark.read.option("multiLine", true).json(paths: _*)
+
+  private def csvReader(spark: SparkSession) =
+    spark.read.option("header", true).option("escape", "\"").option("multiLine", false)
 
   /** S3 — heterogeneous CSV scan: files may carry different `locations[N]`
     * column sets and orders, so positional glob reads silently misalign
     * (the reference's own warning, etl.py:156-161). We sniff each header,
     * group files with identical headers, read each group in one scan, and
-    * union the groups BY NAME with missing columns as NULL. */
-  def readCsvUnion(spark: SparkSession, dir: String): DataFrame =
-    readCsvFiles(spark, dir, csvFiles(spark, dir))
-
-  private def csvReader(spark: SparkSession) =
-    spark.read.option("header", true).option("escape", "\"").option("multiLine", false)
-
-  /** Each group's all-string schema comes from Spark's own CSV header
+    * union the groups BY NAME with missing columns as NULL.
+    *
+    * Each group's all-string schema comes from Spark's own CSV header
     * handling run over the one header line as a local Dataset: the same
     * `_cN` names for empty headers and the same duplicate-name suffixes as
     * a `header=true` scan, without the scan's schema-inference job. */
-  private def readCsvFiles(spark: SparkSession, dir: String, files: Seq[String]): DataFrame = {
+  def readCsvUnion(spark: SparkSession, dir: String): DataFrame = {
+    val files = listLanding(spark, if (dir.endsWith(".csv")) dir else s"$dir/*.csv")
     require(files.nonEmpty, s"No CSV files found at: $dir")
     val conf = spark.sparkContext.hadoopConfiguration
 
@@ -453,11 +443,11 @@ object SilverEtl {
     splitFlagged(flagged(landing, cfg))
 
   /** S1 → S2/S3: the raw landing frame of a directory, read from exactly
-    * the files format detection listed. */
+    * the landing files format detection lists. */
   def read(spark: SparkSession, landingDir: String): DataFrame =
-    detectLanding(spark, landingDir) match {
-      case ("json", paths) => readJsonFiles(spark, paths)
-      case (_, paths)      => readCsvFiles(spark, landingDir, paths)
+    jsonFiles(spark, landingDir) match {
+      case Seq() => readCsvUnion(spark, landingDir)
+      case json  => readJson(spark, json: _*)
     }
 
   /** End-to-end read + transform from a landing directory (S1 → S2/S3 →

@@ -17,7 +17,7 @@ import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType
   *     partitions present in the incoming frame, the exact semantics of
   *     the reference's DELETE WHERE course/date + append (etl.py:639-677),
   *     without a table format. Each refresh writes one file per partition
-  *     value (a `rebalance` by the partition columns).
+  *     value (a hash repartition by the partition columns).
   *   - M2 first-run CTAS with partitioning → partitioned parquet write.
   *   - M3 schema evolution → align-by-name projection (add missing as
   *     NULL, drop unknown extras) mirroring etl.py:654-673.
@@ -54,21 +54,12 @@ object ParquetTable {
     * `df` are replaced; everything else is untouched. Re-running the same
     * ingest is a no-op in row counts (the reference's DELETE+append goal).
     *
-    * Rows are rebalanced by the partition columns before the write, so a
-    * refresh lands one file per partition value (AQE coalesces the small
-    * shuffle partitions and splits only a partition larger than its
-    * advisory size), not one file per upstream task per partition. Spark
-    * drops a rebalance when AQE is off, as it is inside a streaming
-    * micro-batch; there the rows are hash-repartitioned by the same
-    * columns instead, which keeps one file per value but splits no skew. */
+    * Rows are hash-repartitioned by the partition columns before the
+    * write, so a refresh lands one file per partition value, not one file
+    * per upstream task per partition. */
   def refreshPartitions(df: DataFrame, path: String, partitionCols: Seq[String]): Unit = {
     require(partitionCols.nonEmpty, "partition refresh needs partition columns")
-    val cols = partitionCols.map(col)
-    val clustered =
-      if (df.sparkSession.conf.get("spark.sql.adaptive.enabled").toBoolean)
-        df.hint("rebalance", cols: _*)
-      else df.repartition(cols: _*)
-    clustered.write
+    df.repartition(partitionCols.map(col): _*).write
       .mode(SaveMode.Overwrite)
       .option("partitionOverwriteMode", "dynamic")
       .partitionBy(partitionCols: _*)

@@ -133,13 +133,24 @@ class SilverJobSpec extends SparkSpec {
 
   test("detection and the silver read use only the listed landing files") {
     val dir = java.nio.file.Paths.get(tmp())
-    Files.copy(java.nio.file.Paths.get(res("/golf/json/sample_json.json")),
-      dir.resolve("sample_json.json"))
+    def copy(fixture: String, name: String, to: java.nio.file.Path = dir): Unit =
+      Files.copy(java.nio.file.Paths.get(res(fixture)), to.resolve(name))
+    copy("/golf/json/sample_json.json", "sample_json.json")
+    // Hidden names that match `*.json`, each a valid export of another round.
+    copy("/golf/json_invalid/invalid_coordinates.json", "_partial.json")
+    copy("/golf/json_mongo/sample_json_mongodb.json", ".tmp.json")
     Files.writeString(dir.resolve("_SUCCESS"), "")
     Files.writeString(dir.resolve(".sample_json.json.crc"), "junk")
     assert(detectFileFormat(spark, dir.toString) === "json")
     assert(jobsStartedBy(detectFileFormat(spark, dir.toString)) === 0)
     assertSameRows(SilverEtl.read(spark, dir.toString),
       readJson(spark, res("/golf/json/sample_json.json")))
+
+    // A CSV drop beside a hidden JSON file is still read as CSV.
+    val csvDir = java.nio.file.Paths.get(tmp())
+    copy("/golf/csv/erinhills_a.rounds.csv", "erinhills_a.rounds.csv", csvDir)
+    copy("/golf/json/sample_json.json", "_partial.json", csvDir)
+    assertSameRows(SilverEtl.read(spark, csvDir.toString),
+      readCsvUnion(spark, res("/golf/csv/erinhills_a.rounds.csv")))
   }
 }

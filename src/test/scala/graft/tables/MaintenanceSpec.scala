@@ -39,7 +39,7 @@ class MaintenanceSpec extends SparkSpec {
   }
 
   // AQE on (batch jobs) and off (Spark turns it off in streaming
-  // micro-batches, where a rebalance hint is dropped).
+  // micro-batches).
   Seq(true, false).foreach { aqe =>
     test(s"M1: a partition refresh writes one file per partition value, idempotently (AQE $aqe)") {
       val session = spark.newSession()
