@@ -18,16 +18,31 @@ import org.apache.spark.sql.types._
   *     cross-engine correctness gate, where sketches can't hash-match)
   *   - `AT TIME ZONE 'UTC'` → no-op (session TZ pinned to UTC)
   *
-  * Scale notes: every model is a single shuffle-by-its-grain aggregation
-  * (partial aggregation map-side); derived models read `fact_rounds`
-  * instead of re-scanning fix-grain telemetry — the reference's own
-  * manual common-subplan reuse (pace_summary_by_round.sql:5-7), which the
-  * runner turns into an explicit `.cache()`.
+  * Scale notes: [[GoldRunner]] hands every model silver hash-clustered by
+  * `course_id`. Every per-course and per-round model groups by keys that
+  * include `course_id`, so it plans with no exchange; distinct counts are
+  * written as two-level aggregates whose first level keeps `course_id`,
+  * or as plain counts where the grain already makes a value unique, so
+  * none plans an Expand. Joins of per-course frames are shuffled hash
+  * joins, which on that input need neither an exchange nor a broadcast
+  * job. Only the models keyed off the course (devices across courses, the
+  * global single-row overview) shuffle, and only once silver spans more
+  * than one partition. Derived models read `fact_rounds` instead of
+  * re-scanning fix-grain telemetry — the reference's own manual
+  * common-subplan reuse (pace_summary_by_round.sql:5-7), which the runner
+  * turns into an explicit persist.
   */
 object GoldModels {
 
   private def pct(num: org.apache.spark.sql.Column, den: org.apache.spark.sql.Column, dp: Int) =
     round(lit(100.0) * num / nullif(den, lit(0)), dp)
+
+  /** The right side of an equi-join whose sides are clustered alike on
+    * keys the join includes, as every per-course frame built from
+    * [[GoldRunner]]'s clustered silver is: a shuffled hash join there
+    * plans with no exchange and, unlike the broadcast the planner picks
+    * for a small side, runs no job of its own. */
+  private def coPartitioned(df: DataFrame): DataFrame = df.hint("shuffle_hash")
 
   // ------------------------------------------------------------ fact_rounds
 
@@ -199,12 +214,14 @@ object GoldModels {
         .otherwise(date_format(col("round_start_ts"), "MMMM")).as("month_name"))
     val monthly = keyed
       .groupBy(col("course_id"), col("month_start"), col("month_number"), col("month_name"))
-      .agg(countDistinct(col("round_id")).as("rounds"))
+      // fact_rounds' (course_id, round_id) grain makes each round_id
+      // distinct within its course.
+      .agg(count(col("round_id")).as("rounds"))
     val totals = monthly
       .groupBy(col("course_id").as("t_course_id"))
       .agg(sum(col("rounds")).as("total_rounds"))
     monthly
-      .join(totals, monthly("course_id") === totals("t_course_id"))
+      .join(coPartitioned(totals), monthly("course_id") === totals("t_course_id"))
       .select(
         col("course_id"), col("month_start"), col("month_number"), col("month_name"),
         col("rounds"),
@@ -240,14 +257,16 @@ object GoldModels {
         max(col("start_section")).as("max_start_section"),
         min(col("first_tee_section_number")).as("min_first_tee_section_number"),
         max(col("first_tee_section_number")).as("max_first_tee_section_number"))
+    // startStats' grain is (course_id, start_hole), so each start hole is
+    // already distinct within its course.
     val totals = startStats
       .groupBy(col("course_id").as("t_course_id"))
       .agg(
         sum(col("rounds_with_this_start")).as("total_rounds"),
         sum(col("complete_rounds_with_this_start")).as("total_complete_rounds"),
-        countDistinct(col("start_hole")).as("distinct_start_holes"))
+        count(col("start_hole")).as("distinct_start_holes"))
     startStats
-      .join(totals, startStats("course_id") === totals("t_course_id"))
+      .join(coPartitioned(totals), startStats("course_id") === totals("t_course_id"))
       .select(
         col("course_id"), col("start_hole"),
         col("rounds_with_this_start"), col("complete_rounds_with_this_start"),
@@ -266,28 +285,53 @@ object GoldModels {
   /** gold.course_configuration_analysis — 9/18/27 typing, shotgun starts,
     * complexity score (course_configuration_analysis.sql:7-113). */
   def courseConfigurationAnalysis(factRounds: DataFrame): DataFrame = {
-    val summary = factRounds
+    def rounds(cond: org.apache.spark.sql.Column) = sum(when(cond, 1).otherwise(0))
+    // Two levels, (course, start hole) then course, so neither distinct
+    // count plans an Expand: the distinct start holes are the first
+    // level's non-null keys, and fact_rounds' (course_id, round_id) grain
+    // makes every round_id distinct within its course. The average is
+    // Σ/n of the partials, the same arithmetic as Average's buffer.
+    val perStart = factRounds
+      .groupBy(col("course_id"), col("start_hole"))
+      .agg(
+        count(lit(1)).as("rounds_"),
+        count(col("round_id")).as("round_ids_"),
+        max(col("max_section_number")).as("max_section_"),
+        max(col("holes_played")).as("max_holes_"),
+        max(col("nines_played")).as("max_nines_"),
+        rounds(col("is_nine_hole") === true).as("nine_hole_"),
+        rounds(col("is_nine_hole") === false || col("is_nine_hole").isNull).as("full_"),
+        rounds(col("is_complete") === true).as("complete_"),
+        rounds(col("is_complete") === false).as("incomplete_"),
+        rounds(col("nines_played") === 1).as("single_nine_"),
+        rounds(col("nines_played") === 2).as("two_nine_"),
+        rounds(col("nines_played") >= 3).as("three_nine_"),
+        sum(col("fix_count")).as("fix_sum_"),
+        count(col("fix_count")).as("fix_n_"),
+        min(col("fix_count")).as("fix_min_"),
+        max(col("fix_count")).as("fix_max_"))
+    val summary = perStart
       .groupBy(col("course_id"))
       .agg(
-        countDistinct(col("round_id")).as("total_rounds"),
-        max(col("max_section_number")).as("max_section_seen"),
-        max(col("holes_played")).as("max_holes_in_round"),
-        max(col("nines_played")).as("max_nines_in_round"),
-        sum(when(col("is_nine_hole") === true, 1).otherwise(0)).as("nine_hole_rounds"),
-        sum(when(col("is_nine_hole") === false || col("is_nine_hole").isNull, 1).otherwise(0))
-          .as("full_rounds"),
-        sum(when(col("is_complete") === true, 1).otherwise(0)).as("complete_rounds"),
-        sum(when(col("is_complete") === false, 1).otherwise(0)).as("incomplete_rounds"),
-        countDistinct(col("start_hole")).as("unique_start_holes"),
-        sum(when(col("start_hole") === 1, 1).otherwise(0)).as("rounds_starting_hole_1"),
-        sum(when(col("start_hole") =!= 1 && col("start_hole").isNotNull, 1).otherwise(0))
-          .as("shotgun_start_rounds"),
-        sum(when(col("nines_played") === 1, 1).otherwise(0)).as("single_nine_rounds"),
-        sum(when(col("nines_played") === 2, 1).otherwise(0)).as("two_nine_rounds"),
-        sum(when(col("nines_played") >= 3, 1).otherwise(0)).as("three_nine_rounds"),
-        round(avg(col("fix_count")), 0).as("avg_locations_per_round"),
-        min(col("fix_count")).as("min_locations_per_round"),
-        max(col("fix_count")).as("max_locations_per_round"))
+        sum(col("round_ids_")).as("total_rounds"),
+        max(col("max_section_")).as("max_section_seen"),
+        max(col("max_holes_")).as("max_holes_in_round"),
+        max(col("max_nines_")).as("max_nines_in_round"),
+        sum(col("nine_hole_")).as("nine_hole_rounds"),
+        sum(col("full_")).as("full_rounds"),
+        sum(col("complete_")).as("complete_rounds"),
+        sum(col("incomplete_")).as("incomplete_rounds"),
+        count(col("start_hole")).as("unique_start_holes"),
+        sum(when(col("start_hole") === 1, col("rounds_")).otherwise(0))
+          .as("rounds_starting_hole_1"),
+        sum(when(col("start_hole") =!= 1 && col("start_hole").isNotNull, col("rounds_"))
+          .otherwise(0)).as("shotgun_start_rounds"),
+        sum(col("single_nine_")).as("single_nine_rounds"),
+        sum(col("two_nine_")).as("two_nine_rounds"),
+        sum(col("three_nine_")).as("three_nine_rounds"),
+        round(sum(col("fix_sum_")) / sum(col("fix_n_")), 0).as("avg_locations_per_round"),
+        min(col("fix_min_")).as("min_locations_per_round"),
+        max(col("fix_max_")).as("max_locations_per_round"))
       .withColumn("likely_course_type",
         when(col("max_section_seen") > 54, "27-hole")
           .when(col("max_section_seen") > 27, "18-hole")
@@ -517,13 +561,13 @@ object GoldModels {
       .groupBy(col("facility_id").as("u_course_id"))
       .agg(array_sort(collect_set(col("unit_name"))).as("unit_names"))
     baseCourses
-      .join(config.withColumnRenamed("course_id", "c_course_id"),
+      .join(coPartitioned(config.withColumnRenamed("course_id", "c_course_id")),
         col("course_id") === col("c_course_id"), "left")
-      .join(dq.withColumnRenamed("course_id", "d_course_id"),
+      .join(coPartitioned(dq.withColumnRenamed("course_id", "d_course_id")),
         col("course_id") === col("d_course_id"), "left")
-      .join(completeness.withColumnRenamed("course_id", "t_course_id"),
+      .join(coPartitioned(completeness.withColumnRenamed("course_id", "t_course_id")),
         col("course_id") === col("t_course_id"), "left")
-      .join(roundRange, col("course_id") === col("r_course_id"), "left")
+      .join(coPartitioned(roundRange), col("course_id") === col("r_course_id"), "left")
       .join(broadcast(units), col("course_id") === col("u_course_id"), "left")
       .select(
         col("course_id"),
@@ -580,7 +624,7 @@ object GoldModels {
         count(lit(1)).as("silver_distinct_rounds_all"),
         sum(col("has_np")).cast(LongType).as("silver_distinct_rounds_non_padding"))
     val silverCounts = rowCounts
-      .join(roundCounts, col("s_course_id") === col("rc_course_id"), "left")
+      .join(coPartitioned(roundCounts), col("s_course_id") === col("rc_course_id"), "left")
       .select(col("s_course_id"),
         col("silver_total_rows"), col("silver_padding_rows"),
         col("silver_non_padding_rows"), col("silver_ts_missing_rows"),
@@ -589,18 +633,29 @@ object GoldModels {
           .as("silver_distinct_rounds_all"),
         coalesce(col("silver_distinct_rounds_non_padding"), lit(0L))
           .as("silver_distinct_rounds_non_padding"))
+    // fact_rounds' grain is (course_id, round_id): its round_ids are
+    // already distinct within a course.
     val fr = factRounds.groupBy(col("course_id").as("f_course_id"))
       .agg(
         count(lit(1)).as("gold_fact_rounds_rows"),
-        countDistinct(col("round_id")).as("gold_fact_rounds_distinct_rounds"),
+        count(col("round_id")).as("gold_fact_rounds_distinct_rounds"),
         sum(col("fix_count")).as("gold_fact_rounds_sum_fix_count"))
-    val hp = holePerf.groupBy(col("course_id").as("h_course_id"))
+    // Hole performance's two distinct counts are two-level aggregates that
+    // keep course_id in their first level, joined back per course.
+    val hpKeys = holePerf
+      .groupBy(col("course_id"),
+        concat_ws(":", col("round_id"), col("hole_number"), col("nine_number")))
+      .agg(count(lit(1)).as("n"))
+      .groupBy(col("course_id").as("h_course_id"))
       .agg(
-        count(lit(1)).as("gold_hole_perf_rows"),
-        countDistinct(col("round_id")).as("gold_hole_perf_distinct_rounds"),
-        countDistinct(concat_ws(":",
-          col("round_id"), col("hole_number"), col("nine_number")))
-          .as("gold_hole_perf_distinct_round_hole_nine"))
+        sum(col("n")).as("gold_hole_perf_rows"),
+        count(lit(1)).as("gold_hole_perf_distinct_round_hole_nine"))
+    val hpRounds = holePerf.select(col("course_id"), col("round_id")).distinct()
+      .groupBy(col("course_id").as("hr_course_id"))
+      .agg(count(col("round_id")).as("gold_hole_perf_distinct_rounds"))
+    val hp = hpKeys.join(coPartitioned(hpRounds), col("h_course_id") === col("hr_course_id"))
+      .select(col("h_course_id"), col("gold_hole_perf_rows"),
+        col("gold_hole_perf_distinct_rounds"), col("gold_hole_perf_distinct_round_hole_nine"))
     val sm = roundsByMonth.groupBy(col("course_id").as("m_course_id"))
       .agg(
         sum(col("rounds")).as("gold_rounds_by_month_sum_rounds"),
@@ -616,12 +671,12 @@ object GoldModels {
       lit(1).as("gold_dim_course_present"),
       col("unit_count"))
     courses
-      .join(silverCounts, col("course_id") === col("s_course_id"), "left")
-      .join(fr, col("course_id") === col("f_course_id"), "left")
-      .join(hp, col("course_id") === col("h_course_id"), "left")
-      .join(sm, col("course_id") === col("m_course_id"), "left")
-      .join(sw, col("course_id") === col("w_course_id"), "left")
-      .join(dc, col("course_id") === col("d_course_id"), "left")
+      .join(coPartitioned(silverCounts), col("course_id") === col("s_course_id"), "left")
+      .join(coPartitioned(fr), col("course_id") === col("f_course_id"), "left")
+      .join(coPartitioned(hp), col("course_id") === col("h_course_id"), "left")
+      .join(coPartitioned(sm), col("course_id") === col("m_course_id"), "left")
+      .join(coPartitioned(sw), col("course_id") === col("w_course_id"), "left")
+      .join(coPartitioned(dc), col("course_id") === col("d_course_id"), "left")
       .drop("s_course_id", "f_course_id", "h_course_id", "m_course_id",
         "w_course_id", "d_course_id")
   }
@@ -693,7 +748,7 @@ object GoldModels {
         max(col("device")).as("device_id"),
         max(col("first_fix")).as("first_fix"),
         max(col("last_fix")).as("last_fix"))
-    numeric.join(strings, Seq("course_id", "round_id"))
+    numeric.join(coPartitioned(strings), Seq("course_id", "round_id"))
       .select(
         col("course_id"), col("round_id"), col("total_rows"), col("padding_rows"),
         col("non_padding_rows"), col("ts_missing_rows"), col("ts_missing_non_padding_rows"),
@@ -770,12 +825,14 @@ object GoldModels {
     // Same decomposition as globalCourseSummary: two countDistincts in
     // one agg Expand the full 100 TB scan ×3 before partial
     // aggregation, and the percentile drags every counter through a
-    // sort-based ObjectHashAggregate. Split into a codegen counter agg,
-    // one two-level distinct agg per distinct column, and a percentile
-    // over a one-column slice; all are single-row frames, so the
-    // crossJoins are free.
+    // sort-based ObjectHashAggregate. Split into a codegen counter agg
+    // that also counts the courses (a single distinct over the
+    // clustering key, so its first level needs no exchange), a two-level
+    // distinct agg over devices, and a percentile over a one-column
+    // slice; all are single-row frames, so the crossJoins are free.
     val filtered = silver.filter(col("course_id").isNotNull)
     val baseStats = filtered.agg(
+      countDistinct(col("course_id")).as("courses"),
       count(lit(1)).as("total_rows"),
       sum(when(col("is_location_padding"), 1).otherwise(0)).as("padding_rows"),
       sum(when(!col("is_location_padding"), 1).otherwise(0)).as("non_padding_rows"),
@@ -787,15 +844,12 @@ object GoldModels {
       min(col("fix_timestamp")).as("first_fix_ts"),
       max(col("fix_timestamp")).as("last_fix_ts"),
       avg(when(!col("is_location_padding"), col("pace_gap"))).as("avg_pace_gap_sec"))
-    val courseStats = filtered.select(col("course_id"))
-      .agg(countDistinct(col("course_id")).as("courses"))
     val devStats = filtered.select(col("device"))
       .agg(countDistinct(col("device")).as("distinct_devices"))
     val medStats = filtered
       .select(when(!col("is_location_padding"), col("pace_gap")).as("pg"))
       .agg(median.as("median_pace_gap_sec"))
-    val rowStats = baseStats
-      .crossJoin(courseStats).crossJoin(devStats).crossJoin(medStats)
+    val rowStats = baseStats.crossJoin(devStats).crossJoin(medStats)
     val agg0 = rowStats.crossJoin(
       roundFlagCounts(roundFlagRollup(silver, perCourse = false), Nil))
     agg0.select(
@@ -876,7 +930,7 @@ object GoldModels {
       .groupBy(col("course_id"))
       .agg(median.as("median_pace_gap_sec"))
     val rowStats = baseStats
-      .join(medStats, Seq("course_id"))
+      .join(coPartitioned(medStats), Seq("course_id"))
       .select(
         col("course_id"), col("total_rows"), col("padding_rows"),
         col("non_padding_rows"), col("distinct_devices"),
@@ -887,7 +941,7 @@ object GoldModels {
       roundFlagRollup(silver, perCourse = true), Seq("course_id"))
       .withColumnRenamed("course_id", "r_course_id")
     val joined = rowStats
-      .join(roundStats, col("course_id") === col("r_course_id"), "left")
+      .join(coPartitioned(roundStats), col("course_id") === col("r_course_id"), "left")
       .drop("r_course_id")
     // a course whose round_ids are all NULL has no flag-rollup rows: its
     // distinct counts are 0 (reference COUNT(DISTINCT ...) semantics)
@@ -956,7 +1010,7 @@ object GoldModels {
       .select((keys :+ "pace_gap").map(col): _*)
       .groupBy(keys.map(col): _*)
       .agg(median.as("median_pace_gap_sec"))
-    base.join(rounds, keys, "left").join(med, keys)
+    base.join(coPartitioned(rounds), keys, "left").join(coPartitioned(med), keys)
       .select(
         col("course_id"), col("day_type"), col("time_bucket"),
         when(col("hk") === -1, lit(null).cast(IntegerType))

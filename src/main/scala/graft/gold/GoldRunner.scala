@@ -1,6 +1,8 @@
 package graft.gold
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.graft.Clustered
 import org.apache.spark.storage.StorageLevel
 
 import scala.collection.immutable.ListMap
@@ -9,16 +11,26 @@ import scala.collection.immutable.ListMap
   * dependency order (fact_rounds → derived models → dim_course →
   * gold_coverage_audit, `SURVEY.md §3.2`) and materializes each model.
   *
-  * `fact_rounds` and the silver input are persisted across the build —
-  * the explicit form of the reference's "derive from fact_rounds to avoid
-  * re-scanning fix-grain telemetry" rule (pace_summary_by_round.sql:5-7).
-  * At 100 TB the persist becomes a written intermediate table; the
-  * dependency order is identical.
+  * Layout: silver is hash-clustered by `course_id` once, as the
+  * reference's silver table is partitioned by course (etl.py:680-682),
+  * and every model reads that one clustered frame. Every per-course and
+  * per-round model groups by keys that include `course_id`, so it plans
+  * with no exchange, and a written gold table holds each course's rows
+  * contiguously. Silver small enough to coalesce into one partition is
+  * one task per model and one file per gold table. `fact_rounds` is
+  * persisted on top of it — the explicit form of the reference's "derive
+  * from fact_rounds to avoid re-scanning fix-grain telemetry" rule
+  * (pace_summary_by_round.sql:5-7) — and keeps the clustering. At 100 TB
+  * the clustered frame becomes a written, course-bucketed intermediate
+  * table; the dependency order is identical.
   *
-  * Cache contract: `buildAll` persists `silver` and the returned
-  * `fact_rounds` (MEMORY_AND_DISK) and never releases them, because the
-  * returned models are lazy and read both until they are written. The
-  * caller unpersists both once every model it needs is materialised.
+  * Cache contract: the clustered silver is an eager local checkpoint, not
+  * a session cache entry; its blocks go once the returned models are no
+  * longer reachable. `buildAll` persists the returned `fact_rounds`
+  * (MEMORY_AND_DISK) and never releases it, because the returned models
+  * are lazy and read it until they are written. The caller unpersists
+  * `fact_rounds` once every model it needs is materialised; after that
+  * `buildAll` leaves nothing in the session's cache.
   */
 object GoldRunner {
 
@@ -27,7 +39,7 @@ object GoldRunner {
       silver: DataFrame,
       topology: DataFrame,
       exactPercentiles: Boolean = false): ListMap[String, DataFrame] = {
-    val s = silver.persist(StorageLevel.MEMORY_AND_DISK)
+    val s = Clustered.localCheckpoint(silver, col("course_id"))
     val factRounds = GoldModels.factRounds(s).persist(StorageLevel.MEMORY_AND_DISK)
     val holePerf = GoldModels.factRoundHolePerformance(s, topology)
     val byMonth = GoldModels.courseRoundsByMonth(factRounds)

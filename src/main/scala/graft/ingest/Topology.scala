@@ -155,7 +155,7 @@ object Topology {
     * distributed passes + driver assembly (dimensions.py:241-292). */
   def buildTopologyTyped(spark: SparkSession, silver: DataFrame, minFixes: Long = 100)
       : Seq[CourseTopology] = {
-    val valid = validFixes(silver).persist()
+    val valid = validFixes(silver).repartition(col("course_id")).persist()
     try {
       // Pass 1 — per-course stats (count gate + typing maxima).
       val stats = valid.groupBy(col("course_id"))

@@ -32,6 +32,18 @@ object MaintenanceQueries {
     p.toString
   }
 
+  /** orders' key, price and priority, read in a session of their own
+    * that caps the rows per written file at a sixth of the table. Every
+    * IncrementalTable commit stages one file per partition value, so this
+    * is how a gate lands a fragmented commit for compaction to collapse. */
+  private def fragmentingOrders(s: SparkSession, d: String): DataFrame = {
+    val frag = s.newSession()
+    val orders = t(frag, d, "orders")
+      .select(col("o_orderkey"), col("o_totalprice"), col("o_orderpriority"))
+    frag.conf.set("spark.sql.files.maxRecordsPerFile", math.max(1L, orders.count() / 6))
+    orders
+  }
+
   val defs: Seq[QueryDef] = Seq(
 
     // M1/M2 — idempotent partition refresh (etl.py:639-682): land orders
@@ -764,20 +776,18 @@ object MaintenanceQueries {
                TRUE AS both_columns_skip""")),
 
     // M18 — OPTIMIZE inside the versioned table (IncrementalTable
-    // .compact): a fragmented commit (6-way shuffle → up to 6 files per
-    // partition) compacts into a NEW manifest version. Pins: file count
-    // fell, the pre-compaction version still reads (time travel), the
-    // current version's data is untouched, and the row-level diff across
-    // the compaction is EMPTY — compaction is a layout rewrite, never a
-    // data change.
+    // .compact): a fragmented commit (files capped at a sixth of the
+    // rows → several files per partition) compacts into a NEW manifest
+    // version. Pins: file count fell, the pre-compaction version still
+    // reads (time travel), the current version's data is untouched, and
+    // the row-level diff across the compaction is EMPTY — compaction is a
+    // layout rewrite, never a data change.
     QueryDef(
       "m18_incremental_compact",
       (s, d) => {
         val it = graft.tables.IncrementalTable
         val base = scratch("m18")
-        val orders = t(s, d, "orders")
-          .select(col("o_orderkey"), col("o_totalprice"), col("o_orderpriority"))
-        it.commitFull(orders.repartition(6), base, Seq("o_orderpriority"))
+        it.commitFull(fragmentingOrders(s, d), base, Seq("o_orderpriority"))
         val (before, after) = it.compact(s, base, Seq("o_orderpriority"))
         val v1 = it.read(s, base, Some(1))
           .agg(count(lit(1)).as("n_v1"), dsum(col("o_totalprice")).as("v1_total"))
@@ -1038,7 +1048,7 @@ object MaintenanceQueries {
         val base = scratch("m23")
         val orders = t(s, d, "orders")
           .select(col("o_orderkey"), col("o_totalprice"), col("o_orderpriority"))
-        it.commitFull(orders.repartition(6), base, Seq("o_orderpriority"))
+        it.commitFull(fragmentingOrders(s, d), base, Seq("o_orderpriority"))
         it.refreshPartitions(
           orders.filter(col("o_orderpriority") === "1-URGENT")
             .select(col("o_orderkey"), (col("o_totalprice") * 2).as("o_totalprice"),

@@ -196,14 +196,17 @@ object IncrementalTable {
     * on (staging dir, staged file paths relative to it), then delete the
     * dir — also when the staging write itself throws, so a failed write
     * leaves no debris. The write runs OUTSIDE the commit lock — this is
-    * the heavy part. */
+    * the heavy part. Rows are hash-repartitioned by the partition columns
+    * first, so each partition value stages as one file, not one file per
+    * upstream task. */
   private def staged[T](df: DataFrame, path: String, partitionCols: Seq[String])(
       body: (Path, Seq[Path]) => T): T = {
     val staging = Paths.get(path, s".staging-${java.util.UUID.randomUUID()}")
     try {
-      val w = df.write.mode("overwrite")
-      (if (partitionCols.nonEmpty) w.partitionBy(partitionCols: _*) else w)
-        .parquet(staging.toString)
+      val w =
+        if (partitionCols.isEmpty) df.write
+        else df.repartition(partitionCols.map(col): _*).write.partitionBy(partitionCols: _*)
+      w.mode("overwrite").parquet(staging.toString)
       body(staging, FsUtil.parquetFiles(staging).map(staging.relativize))
     } finally FsUtil.deleteRec(staging)
   }
@@ -479,11 +482,10 @@ object IncrementalTable {
 
     // heavy rewrite outside the lock: read ONLY the fragmented
     // partitions (readFiles groups owned vs cloned-foreign entries by
-    // their data roots), one task per partition so each dir lands as
-    // one file — compacting a shallow clone MATERIALIZES the compacted
-    // partitions locally, Delta CLONE's exact behavior on rewrite
+    // their data roots); `staged` lands each dir as one file —
+    // compacting a shallow clone MATERIALIZES the compacted partitions
+    // locally, Delta CLONE's exact behavior on rewrite
     val df = readFiles(spark, path, schema0, frag.values.flatten.toSeq)
-      .repartition(partitionCols.map(col): _*)
     staged(df, path, partitionCols) { (staging, rels) =>
       withLock(path) {
         val vNow = currentVersion(path, store).getOrElse(v0)

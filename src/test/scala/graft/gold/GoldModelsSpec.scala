@@ -34,8 +34,9 @@ class GoldModelsSpec extends SparkSpec {
 
   private lazy val models = GoldRunner.buildAll(silver, topology)
 
-  // buildAll leaves silver and fact_rounds cached for its caller; release
-  // them so the shared session does not carry them into later suites.
+  // buildAll leaves fact_rounds cached for its caller, and this spec
+  // persisted silver; release both so the shared session does not carry
+  // them into later suites.
   override def afterAll(): Unit = {
     try {
       models("fact_rounds").unpersist()

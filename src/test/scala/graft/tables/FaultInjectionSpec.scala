@@ -117,11 +117,14 @@ class FaultInjectionSpec extends SparkSpec {
   test("IT: compaction dying before its manifest PUT leaves the table intact, debris collectable") {
     val path = freshPath("it_compact")
     val store = new FaultyCommitStore(LocalCommitStore)
-    // 20 distinct keys hashed over 10 partitions → every hive dir holds
-    // several fragment files, so the compactor always has work
+    // every commit stages one file per partition value; capping the rows
+    // per file in the writing session leaves every hive dir several
+    // fragment files, so the compactor always has work
     val frag = (1L to 20L).map(i => (i, s"v$i", if (i % 2 == 0) "p1" else "p2"))
+    val fragmenting = spark.newSession()
+    fragmenting.conf.set("spark.sql.files.maxRecordsPerFile", "3")
     IncrementalTable.commitFull(
-      frag.toDF("k", "v", "part").repartition(10, col("k")),
+      fragmenting.createDataFrame(frag).toDF("k", "v", "part"),
       path, Seq("part"), store = store)
     val before = IncrementalTable.read(spark, path, store = store)
       .select("k", "v").as[(Long, String)].collect().toSet

@@ -50,6 +50,32 @@ class IncrementalTableSpec extends SparkSpec {
     assert(removed.forall(_.startsWith("part=p2/")), s"removed outside p2: $removed")
   }
 
+  // AQE on (batch jobs) and off (Spark turns it off in streaming
+  // micro-batches, where ContinuousRefresh.startVersioned commits).
+  Seq(true, false).foreach { aqe =>
+    test(s"every commit stages one file per partition value (AQE $aqe)") {
+      val session = spark.newSession()
+      session.conf.set("spark.sql.adaptive.enabled", aqe.toString)
+      import session.implicits._
+      val path = freshPath(s"one_file_aqe_$aqe")
+      def rows(tag: String) = (1L to 60L).map(i => (i, s"$tag$i", s"p${i % 3}"))
+        .toDF("k", "v", "part")
+        .repartition(8) // every task holds rows of every partition value
+      def addedPerDir(v: Int): Map[String, Int] =
+        IncrementalTable.fileChanges(path, v - 1, v)._1
+          .groupBy(f => f.substring(0, f.lastIndexOf('/')))
+          .map { case (dir, files) => dir -> files.size }
+
+      IncrementalTable.commitFull(rows("a"), path, Seq("part"))
+      IncrementalTable.commitFull(rows("b"), path, Seq("part"))
+      assert(addedPerDir(2) === Map("part=p0" -> 1, "part=p1" -> 1, "part=p2" -> 1))
+      IncrementalTable.refreshPartitions(
+        rows("c").filter($"part" =!= "p0"), path, Seq("part"))
+      assert(addedPerDir(3) === Map("part=p1" -> 1, "part=p2" -> 1))
+      assert(IncrementalTable.read(session, path).count() === 60)
+    }
+  }
+
   test("refresh carries untouched partitions by reference (same physical files)") {
     val path = freshPath("carry")
     IncrementalTable.commitFull(
@@ -142,9 +168,12 @@ class IncrementalTableSpec extends SparkSpec {
   test("compact: fragments collapse, history intact, diff across compaction empty") {
     val path = freshPath("compact")
     val rows = (1L to 40L).map(i => (i, s"v$i", s"p${i % 2}"))
-    // 4-way shuffle → up to 4 files per partition
+    // every commit stages one file per partition value; capping the rows
+    // per file in the writing session leaves 4 files per partition
+    val fragmenting = spark.newSession()
+    fragmenting.conf.set("spark.sql.files.maxRecordsPerFile", "5")
     IncrementalTable.commitFull(
-      rows.toDF("k", "v", "part").repartition(4), path, Seq("part"))
+      fragmenting.createDataFrame(rows).toDF("k", "v", "part"), path, Seq("part"))
     val (b, a) = IncrementalTable.compact(spark, path, Seq("part"))
     assert(b > a && a === 2, s"expected 2 compacted files, got $a of $b")
     assert(IncrementalTable.versions(path) === Seq(1, 2))

@@ -99,11 +99,15 @@ class ShallowCloneSpec extends SparkSpec {
   test("compacting a clone materializes compacted partitions locally") {
     val src = freshPath("cmp_src")
     val dst = freshPath("cmp_dst")
-    // two files in p1 → fragmented by maxFilesPerPartition = 1
-    // (repartitionByRange splits the distinct ks deterministically)
+    // two files in p1 → fragmented by maxFilesPerPartition = 1 (every
+    // commit stages one file per partition value, so the writing session
+    // caps the rows per file)
+    val fragmenting = spark.newSession()
+    fragmenting.conf.set("spark.sql.files.maxRecordsPerFile", "2")
     IncrementalTable.commitFull(
-      df((1L, "a", "p1"), (2L, "b", "p1"), (3L, "c", "p1"), (4L, "d", "p1"))
-        .repartitionByRange(2, col("k")), src, Seq("part"))
+      fragmenting.createDataFrame(
+        Seq((1L, "a", "p1"), (2L, "b", "p1"), (3L, "c", "p1"), (4L, "d", "p1")))
+        .toDF("k", "v", "part"), src, Seq("part"))
     IncrementalTable.shallowClone(src, dst)
     val (before, after) = IncrementalTable.compact(spark, dst, Seq("part"))
     assert(before > after)
